@@ -1,12 +1,18 @@
-"""Minimal HTTP API: the reference's most-used entry points as a stdlib
-server over ``LineProtocolIngest`` + ``Database.query``.
+"""The HTTP write and query API: the reference's most-used entry points
+as a stdlib server over ``LineProtocolIngest`` + ``Database.query``.
 
 Reference: /root/reference/src/influxdb_ioxd/http.rs —
 routes :364-370 (``POST /api/v2/write``, ``GET /health``,
 ``GET /iox/api/v1/databases/:name/query``), write handler :462-560
 (org+bucket → db name via ``org_bucket``, body = line protocol, optional
 gzip, points without timestamps get server wall-clock ns, 204 on success),
-query handler :595-660 (``q`` + ``format`` ∈ {pretty, csv, json}).
+query handler :595-660 (``q`` + ``format`` ∈ {pretty, csv, json}).  Like
+the reference's router, every route resolves its database per request.
+
+``IoxHttpServer`` is the one server: it defines every route, and serves
+one fixed database.  ``rpc_management.IoxMultiDbHttpServer`` serves an
+IoxServer's live database set by overriding only the three database
+hooks (lookup by name, the name list, the write/delete commit).
 
 Spark-first notes: the handler only *routes* — parsing and ingest run as
 the same distributed ``mapInArrow`` pipeline as every other ingest path, and
@@ -21,6 +27,7 @@ from __future__ import annotations
 import gzip
 import io
 import json
+import re
 import threading
 import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -28,7 +35,7 @@ from urllib.parse import parse_qs, unquote, urlparse
 
 from influxdb_iox_spark.database import Database
 from influxdb_iox_spark.sources.line_protocol import LineProtocolError
-from influxdb_iox_spark.streaming.ingest import LineProtocolIngest
+from influxdb_iox_spark.streaming.ingest import LineProtocolIngest, commit_lines
 
 
 QUERY_FORMATS = ("json", "csv", "pretty")
@@ -40,13 +47,17 @@ def org_and_bucket_to_database(org: str, bucket: str) -> str:
 
 
 class IoxHttpServer:
-    """Single-database HTTP facade.
+    """The HTTP API over one fixed database.
 
     ``ingests`` maps measurement name → LineProtocolIngest; a write request
     fans its lines out to every registered measurement's ingest (the
     distributed parser routes/filters per measurement).  Lines of
     unregistered measurements are ignored, mirroring a schema-gated
     deployment; malformed lines fail the request with 400.
+
+    Routes reach databases only through the hooks ``_database``,
+    ``_database_names``, ``_commit_write`` and ``_commit_delete``;
+    ``db_name`` is the database a db-less v1 request selects.
     """
 
     #: query results beyond this many rows get a 413 instead of an
@@ -63,6 +74,16 @@ class IoxHttpServer:
     ):
         self.database = database
         self.ingests = dict(ingests)
+        # The store's manifest append / chunk-id allocation are single-writer
+        # (atomic-rename safe against crashes, not concurrent writers), so
+        # writes from the threaded HTTP server serialize here.
+        self._write_lock = threading.Lock()
+        self._init_api(database.spark, db_name, max_rows, users)
+
+    def _init_api(
+        self, spark, db_name: str | None, max_rows: int,
+        users: dict[str, str] | None,
+    ) -> None:
         self.db_name = db_name
         self.max_rows = max_rows
         #: user -> password; None = anonymous access (reference default).
@@ -79,7 +100,7 @@ class IoxHttpServer:
         from influxdb_iox_spark.query_tracker import QueryTracker
         from influxdb_iox_spark.subscriptions import SubscriptionRegistry
 
-        self.tracker = QueryTracker(database.spark)
+        self.tracker = QueryTracker(spark)
         # CREATE/DROP/SHOW SUBSCRIPTION + async best-effort forwarding of
         # accepted writes (subscriptions.py)
         self.subscriptions = SubscriptionRegistry()
@@ -96,10 +117,32 @@ class IoxHttpServer:
             "ingest_points_bytes_total": 0,
         }
         self.request_counts: dict[tuple[str, int], int] = {}
-        # The store's manifest append / chunk-id allocation are single-writer
-        # (atomic-rename safe against crashes, not concurrent writers), so
-        # writes from the threaded HTTP server serialize here.
-        self._write_lock = threading.Lock()
+        self._metrics_lock = threading.Lock()  # handler threads write concurrently
+
+    # -- database hooks ----------------------------------------------------
+    def _database(self, name: str | None) -> Database | None:
+        """The Database called ``name``, or None."""
+        return self.database if name == self.db_name else None
+
+    def _database_names(self) -> list[str]:
+        """Every database name (SHOW DATABASES, DDL targets)."""
+        return [self.db_name]
+
+    def _commit_write(self, name: str, text: str) -> int:
+        """Commit ns line protocol to database ``name`` all-or-nothing;
+        returns the number of lines written."""
+        lines = [(ln,) for ln in text.splitlines() if ln.strip()]
+        if lines:
+            lines_df = self.database.spark.createDataFrame(lines, "value string")
+            with self._write_lock:
+                commit_lines(self.ingests.values(), lines_df)
+        return len(lines)
+
+    def _commit_delete(self, name: str, tables: list[str], dp) -> None:
+        """Apply DeletePredicate ``dp`` to ``tables`` of database ``name``."""
+        with self._write_lock:
+            for t in tables:
+                self.database.store.delete_predicate(t, dp)
 
     # -- lifecycle ---------------------------------------------------------
     def start(self, host: str = "127.0.0.1", port: int = 0) -> int:
@@ -148,53 +191,21 @@ class IoxHttpServer:
     def _do_write(
         self, name: str, body: bytes, precision: str | None = None
     ) -> None:
-        self._do_write_inner(name, body, precision)
-        # accepted (no exception) -> mirror to subscribers, O(1) enqueue
-        self.subscriptions.notify_write(name, body, precision)
-
-    def _do_write_inner(
-        self, name: str, body: bytes, precision: str | None = None
-    ) -> None:
-        if name != self.db_name:
+        if self._database(name) is None:
             raise _HttpError(404, f"database {name!r} not found")
-        if precision is not None and precision not in self.PRECISION_NS:
+        factor = self.PRECISION_NS.get(precision or "ns")
+        if factor is None:
             raise _HttpError(400, f"invalid precision {precision!r}")
-        factor = self.PRECISION_NS.get(precision or "ns", 1)
-        text = body.decode("utf-8")
-        lines = [(ln,) for ln in text.splitlines() if ln.strip()]
-        if not lines:
-            return
-        spark = self.database.spark
-        lines_df = spark.createDataFrame(lines, "value string")
-        # server-assigned timestamps truncate to the request's precision
-        # (stock behavior), then scale back to ns with everything else
-        default_time = time.time_ns() // factor
-        with self._write_lock:
-            # Three-phase, all-or-nothing like the reference's write handler:
-            # 1. parse/validate EVERY measurement (errors -> 400, nothing
-            #    persisted); 2. write every chunk's files without registering
-            #    them; 3. register all manifest entries.  A failure in 1-2
-            #    leaves at most orphaned unreferenced directories (GC-able)
-            #    and NOTHING visible to queries.
-            parsed = [
-                (
-                    ing,
-                    ing.parse_lines_df(
-                        lines_df,
-                        default_time_ns=default_time,
-                        precision_factor=factor,
-                    ),
-                )
-                for ing in self.ingests.values()
-            ]
-            written = [
-                (ing, ing.write_parsed(keyed, register=False))
-                for ing, keyed in parsed
-            ]
-            for ing, metas in written:
-                ing.store.register_chunks(ing.table, metas)
-            self.metrics["ingest_lines_total"] += len(lines)
+        if factor != 1:
+            # ns text from here on: the commit, write-buffer replicas,
+            # shard forwarding and subscribers all see what is stored
+            body = _scale_lp_timestamps(body, factor, time.time_ns())
+        n = self._commit_write(name, body.decode("utf-8"))
+        with self._metrics_lock:
+            self.metrics["ingest_lines_total"] += n
             self.metrics["ingest_points_bytes_total"] += len(body)
+        # accepted (no exception) -> mirror to subscribers, O(1) enqueue
+        self.subscriptions.notify_write(name, body)
 
     def handle_delete(self, org: str, bucket: str, body: bytes) -> None:
         """POST /api/v2/delete — the public InfluxDB 2 delete API: JSON
@@ -207,7 +218,8 @@ class IoxHttpServer:
         from influxdb_iox_spark.plans.predicate import DeletePredicate
 
         name = org_and_bucket_to_database(org, bucket)
-        if name != self.db_name:
+        database = self._database(name)
+        if database is None:
             raise _HttpError(404, f"database {name!r} not found")
         try:
             doc = json.loads(body.decode("utf-8"))
@@ -236,30 +248,31 @@ class IoxHttpServer:
         elif picked:
             tables = sorted(picked - excluded)
         else:
-            tables = [t for t in sorted(self.database.schemas) if t not in excluded]
-        unknown = [t for t in tables if t not in self.database.schemas]
+            tables = [t for t in sorted(database.schemas) if t not in excluded]
+        unknown = [t for t in tables if t not in database.schemas]
         if unknown:
             raise _HttpError(404, f"measurement(s) not found: {unknown}")
-        with self._write_lock:
-            for t in tables:
-                self.database.store.delete_predicate(t, dp)
+        self._commit_delete(name, tables, dp)
 
     def render_metrics(self) -> bytes:
         """Prometheus text exposition of the server counters + the store's
         pruning access metrics (GET /metrics, http.rs:678 handle_metrics)."""
+        label = f'{{db_name="{self.db_name}"}}' if self.db_name else ""
         out = []
         for name, v in sorted(self.metrics.items()):
             out.append(f"# TYPE {name} counter")
-            out.append(f'{name}{{db_name="{self.db_name}"}} {v}')
+            out.append(f"{name}{label} {v}")
         for (path, status), v in sorted(self.request_counts.items()):
             out.append(
                 f'http_requests_total{{path="{path}",status="{status}"}} {v}'
             )
-        for table, fams in sorted(self.database.store.prune_metrics.items()):
-            for fam, v in sorted(fams.items()):
-                out.append(
-                    f'{fam}{{db_name="{self.db_name}",table_name="{table}"}} {v}'
-                )
+        for db_name in self._database_names():
+            store = self._database(db_name).store
+            for table, fams in sorted(store.prune_metrics.items()):
+                for fam, v in sorted(fams.items()):
+                    out.append(
+                        f'{fam}{{db_name="{db_name}",table_name="{table}"}} {v}'
+                    )
         return ("\n".join(out) + "\n").encode()
 
     def handle_query(self, name: str, q: str, fmt: str) -> tuple[bytes, str]:
@@ -268,13 +281,14 @@ class IoxHttpServer:
         ``SELECT * FROM <big table>`` over HTTP cannot OOM the driver — the
         client must add a LIMIT (or page).  Cluster-scale result delivery
         belongs to the Flight path, which streams record batches."""
-        if name != self.db_name:
+        database = self._database(name)
+        if database is None:
             raise _HttpError(404, f"database {name!r} not found")
         if fmt not in QUERY_FORMATS:
             # reject before planning/executing — an unknown format must not
             # cost a full Spark job + driver collect
             raise _HttpError(400, f"unknown format {fmt!r}")
-        df = self.database.query(q)
+        df = database.query(q)
         rows = df.limit(self.max_rows + 1).collect()
         if len(rows) > self.max_rows:
             raise _HttpError(
@@ -284,6 +298,33 @@ class IoxHttpServer:
             )
         cols = df.columns
         return render_query_result(cols, rows, fmt)
+
+    def _v1_database(self, db: str | None) -> tuple[str | None, Database | None]:
+        """A v1 request's (selected name, Database): ``db`` or else the
+        default database.  None selected is allowed (SHOW DATABASES and
+        other db-less statements); an unknown one is a 404."""
+        selected = db or self.db_name
+        database = self._database(selected) if selected else None
+        if selected and database is None:
+            raise _HttpError(404, f"database not found: {selected}")
+        return selected, database
+
+    def _v1_statement_args(self, selected: str | None, database) -> dict:
+        """run_statements keyword arguments.  Builds the catalog, so it
+        runs inside the tracked query (its scans join the job group)."""
+        from influxdb_iox_spark.influxql.v1_api import catalog_from_database
+
+        return dict(
+            catalog=catalog_from_database(database) if database is not None else {},
+            databases=self._database_names(),
+            database=database,
+            resolve_database=self._database,
+            selected_db=selected,
+            max_rows=self.max_rows,
+            registry=self.registry,
+            tracker=self.tracker,
+            subscriptions=self.subscriptions,
+        )
 
     def handle_v1_query(
         self, db: str | None, q: str, epoch: str | None,
@@ -300,32 +341,17 @@ class IoxHttpServer:
         so INTO on GET is rejected with the stock-style message.
         ``identity``: the authenticated username (per-statement privilege
         checks when a UserRegistry is configured)."""
-        from influxdb_iox_spark.influxql.v1_api import (
-            catalog_from_database,
-            render_csv,
-            run_statements,
-        )
+        from influxdb_iox_spark.influxql.v1_api import render_csv, run_statements
 
-        if db is not None and db != self.db_name:
-            raise _HttpError(404, f"database not found: {db}")
+        selected, database = self._v1_database(db)
         want_csv = accept is not None and "application/csv" in accept
         if want_csv and epoch is None:
             epoch = "ns"  # stock CSV renders time as epoch ns by default
-        qid = self.tracker.begin(q, db or self.db_name)
+        qid = self.tracker.begin(q, selected)
         try:
             envelope = run_statements(
-                q,
-                catalog_from_database(self.database),
-                databases=[self.db_name],
-                epoch=epoch,
-                max_rows=self.max_rows,
-                database=self.database,
-                read_only=read_only,
-                registry=self.registry,
-                identity=identity,
-                selected_db=db or self.db_name,
-                tracker=self.tracker,
-                subscriptions=self.subscriptions,
+                q, epoch=epoch, read_only=read_only, identity=identity,
+                **self._v1_statement_args(selected, database),
             )
         except ValueError as e:  # bad epoch
             self.tracker.end(qid, status="error")
@@ -350,39 +376,27 @@ class IoxHttpServer:
         holds more than chunk_size rows + one partition — which is why
         chunked responses are exempt from the max_rows cap."""
         from influxdb_iox_spark.influxql.v1_api import (
-            catalog_from_database,
+            _EPOCH_DIV,
             run_statements_chunked,
         )
 
-        if db is not None and db != self.db_name:
-            raise _HttpError(404, f"database not found: {db}")
+        selected, database = self._v1_database(db)
         if chunk_size <= 0:
             raise _HttpError(400, "chunk_size must be positive")
-        from influxdb_iox_spark.influxql.v1_api import _EPOCH_DIV
-
         if epoch is not None and epoch not in _EPOCH_DIV:
             raise _HttpError(400, f"invalid epoch {epoch!r}")
+
         def _tracked():
             # begin() inside the generator: the job-group tag must land on
             # the CONSUMING thread (the handler streams the chunks), and
             # end() must run however iteration stops
-            qid = self.tracker.begin(q, db or self.db_name)
+            qid = self.tracker.begin(q, selected)
             rows = 0
             try:
                 for env in run_statements_chunked(
-                    q,
-                    catalog_from_database(self.database),
-                    databases=[self.db_name],
-                    epoch=epoch,
-                    chunk_size=chunk_size,
-                    database=self.database,
-                    read_only=read_only,
-                    max_rows=self.max_rows,
-                    registry=self.registry,
-                    identity=identity,
-                    selected_db=db or self.db_name,
-                    tracker=self.tracker,
-                    subscriptions=self.subscriptions,
+                    q, epoch=epoch, chunk_size=chunk_size,
+                    read_only=read_only, identity=identity,
+                    **self._v1_statement_args(selected, database),
                 ):
                     rows += _envelope_rows(env)
                     yield env
@@ -395,13 +409,42 @@ class IoxHttpServer:
         return _tracked()
 
 
+_LP_TS = re.compile(rb"^(.*) (-?\d+)[ \t]*(\r?)$")
+
+
+def _scale_lp_timestamps(body: bytes, factor: int, now_ns: int) -> bytes:
+    """Line protocol in the write API's ``precision`` unit → ns text.
+
+    Each line's trailing timestamp token is multiplied by ``factor``; a
+    line without one is stamped with ``now_ns`` truncated to the
+    precision (stock behavior).  The timestamp, when present, is always
+    the final whitespace-separated integer token of a line — quoted field
+    strings cannot end a line unescaped, so the anchored regex cannot
+    misfire inside one.  Blank and comment lines pass through.
+    CRLF-terminated lines (Windows clients, HTTP tooling) scale too — the
+    split is on \\n, so the \\r rides as line tail and is preserved."""
+    stamp = str(now_ns // factor * factor).encode()
+    out = []
+    for line in body.split(b"\n"):
+        m = _LP_TS.match(line)
+        if m:
+            line = (
+                m.group(1) + b" "
+                + str(int(m.group(2)) * factor).encode() + m.group(3)
+            )
+        elif line.strip() and not line.lstrip().startswith(b"#"):
+            tail = b"\r" if line.endswith(b"\r") else b""
+            line = line.rstrip() + b" " + stamp + tail
+        out.append(line)
+    return b"\n".join(out)
+
+
 def _rfc3339_ns(value, param: str) -> int:
     """RFC3339 timestamp → ns since epoch; required (400 when absent or
     unparseable), like the platform delete API.  FULL ns precision: the
     fractional seconds are parsed separately because fromisoformat
     truncates past µs — a delete boundary off by up to 999 ns would
     destroy (or spare) rows the user did not ask about."""
-    import re
     from datetime import datetime, timezone
 
     if not value:
@@ -425,8 +468,7 @@ def _rfc3339_ns(value, param: str) -> int:
 
 
 def render_query_result(cols, rows, fmt: str) -> tuple[bytes, str]:
-    """Render a collected result in one of the v2 query formats (shared by
-    the single-db facade and the multi-db server in rpc_management)."""
+    """Render a collected result in one of the v2 query formats."""
     if fmt == "json":
         out = json.dumps([dict(zip(cols, [_json_val(v) for v in r])) for r in rows])
         return out.encode(), "application/json"
@@ -562,17 +604,14 @@ def _make_handler(api: IoxHttpServer):
                 name,
                 trace_id=ctx[0] if ctx else None,
                 parent_id=ctx[1] if ctx else None,
-                # the multi-db server has no single db_name; span db is
-                # the request's selection there
-                db=db or getattr(api, "db_name", None),
+                db=db or api.db_name,
             )
 
         def _require_write(self, ident: str | None, db: str | None):
             """403 unless ``ident`` may write ``db`` (no-op without a
             configured UserRegistry — dict-auth servers keep the
             any-authenticated-user behavior)."""
-            reg = getattr(api, "registry", None)
-            if reg and not reg.can(ident, db, "write"):
+            if api.registry and not api.registry.can(ident, db, "write"):
                 raise _HttpError(
                     403,
                     f"user {ident or '<anonymous>'} is not authorized to "
@@ -725,8 +764,7 @@ def _make_handler(api: IoxHttpServer):
                 ident = self._authorize(qs)
                 if u.path == "/write":
                     self._require_write(
-                        ident, (qs.get("db") or [api.db_name
-                                if hasattr(api, "db_name") else None])[0],
+                        ident, (qs.get("db") or [api.db_name])[0]
                     )
                 else:
                     org = (qs.get("org") or [None])[0]

@@ -43,20 +43,29 @@ if _FLIGHT_AVAILABLE:
             self.db_name = db_name
 
         def do_get(self, context, ticket):
-            try:
-                info = json.loads(ticket.ticket.decode("utf-8"))
-            except (UnicodeDecodeError, json.JSONDecodeError) as e:
-                raise _flight.FlightServerError(f"invalid ticket: {e}") from e
-            name = info.get("database_name")
-            sql = info.get("sql_query")
-            if not name or sql is None:
-                raise _flight.FlightServerError(
-                    "ticket must carry database_name and sql_query"
-                )
-            if name != self.db_name:
-                raise _flight.FlightUnavailableError(f"database {name!r} not found")
-            table = self.database.query(sql).toArrow()
-            return _flight.RecordBatchStream(table)
+            return serve_sql_ticket(
+                ticket, lambda name: self.database if name == self.db_name else None
+            )
+
+
+def serve_sql_ticket(ticket, lookup):
+    """Flight ``do_get`` body: decode the JSON ReadInfo ticket, resolve
+    its database through ``lookup`` (name → Database or None), run the
+    SQL and stream the result."""
+    try:
+        info = json.loads(ticket.ticket.decode("utf-8"))
+    except (UnicodeDecodeError, json.JSONDecodeError) as e:
+        raise _flight.FlightServerError(f"invalid ticket: {e}") from e
+    name = info.get("database_name")
+    sql = info.get("sql_query")
+    if not name or sql is None:
+        raise _flight.FlightServerError(
+            "ticket must carry database_name and sql_query"
+        )
+    database = lookup(name)
+    if database is None:
+        raise _flight.FlightUnavailableError(f"database {name!r} not found")
+    return _flight.RecordBatchStream(database.query(sql).toArrow())
 
 
 def flight_ticket(database_name: str, sql_query: str) -> bytes:

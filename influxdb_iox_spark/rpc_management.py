@@ -54,7 +54,12 @@ from influxdb_iox_spark.protowire import decode_message, encode_message
 from influxdb_iox_spark.schema import InfluxColumnType, IoxSchema
 from influxdb_iox_spark.sources.line_protocol import LineProtocolError, parse_lines
 from influxdb_iox_spark.sources.store import TableStore
-from influxdb_iox_spark.streaming.ingest import LineProtocolIngest, PartitionTemplate
+from influxdb_iox_spark.http_api import IoxHttpServer
+from influxdb_iox_spark.streaming.ingest import (
+    LineProtocolIngest,
+    PartitionTemplate,
+    commit_lines,
+)
 
 GOOGLE_ANY_PREFIX = "type.googleapis.com/"
 OPERATION_METADATA_TYPE_URL = (
@@ -371,20 +376,16 @@ class IoxServer:
                         raise GrpcStatusError("InvalidArgument", str(e))
                 md.database.register_table(table, new_schema)
             self._save(md)
-            default_time = _time.time_ns()
             lines = [(ln,) for ln in lp_data.splitlines() if ln.strip()]
-            lines_df = self.spark.createDataFrame(lines, "value string")
-            # all-or-nothing across measurements, like the HTTP handler:
-            # parse + write unregistered, then register everything
-            written = []
-            for table in inferred:
-                ing = LineProtocolIngest(
-                    md.database.store, table, md.database.schemas[table], md.template
-                )
-                keyed = ing.parse_lines_df(lines_df, default_time_ns=default_time)
-                written.append((ing, ing.write_parsed(keyed, register=False)))
-            for ing, metas in written:
-                ing.store.register_chunks(ing.table, metas)
+            commit_lines(
+                [
+                    LineProtocolIngest(
+                        md.database.store, table, md.database.schemas[table], md.template
+                    )
+                    for table in inferred
+                ],
+                self.spark.createDataFrame(lines, "value string"),
+            )
 
     def delete_rows(self, db_name: str, table: str, dpred) -> None:
         """Predicate delete: rows of ``table`` matching ``dpred``
@@ -1405,6 +1406,7 @@ except ImportError:  # pragma: no cover
 
 if _FLIGHT_AVAILABLE:
     from influxdb_iox_spark.rpc import InfluxRpc
+    from influxdb_iox_spark.rpc_flight import serve_sql_ticket
     from influxdb_iox_spark.rpc_storage import StorageRpcError, StorageService
     from influxdb_iox_spark import storage_proto as sp
 
@@ -1457,28 +1459,15 @@ if _FLIGHT_AVAILABLE:
         def do_get(self, context, ticket):
             """Flight do_get over the LIVE database set — the query data
             plane on the same socket as the control services, like the
-            reference's single tonic port (JSON ReadInfo ticket,
-            flight.rs:113-118; single-db twin: rpc_flight.IoxFlightServer)."""
-            import json as _json
-
+            reference's single tonic port; gated by serving readiness."""
             if not self.server.serving:
                 raise _flight.FlightUnavailableError(
                     "server is not serving data plane"
                 )
-            try:
-                info = _json.loads(ticket.ticket.decode("utf-8"))
-            except (UnicodeDecodeError, _json.JSONDecodeError) as e:
-                raise _flight.FlightServerError(f"invalid ticket: {e}") from e
-            name = info.get("database_name")
-            sql = info.get("sql_query")
-            if not name or sql is None:
-                raise _flight.FlightServerError(
-                    "ticket must carry database_name and sql_query"
-                )
-            md = self.server.databases.get(name)
-            if md is None:
-                raise _flight.FlightUnavailableError(f"database {name!r} not found")
-            return _flight.RecordBatchStream(md.database.query(sql).toArrow())
+            dbs = self.server.databases
+            return serve_sql_ticket(
+                ticket, lambda name: dbs[name].database if name in dbs else None
+            )
 
         def do_action(self, context, action):
             try:
@@ -1525,285 +1514,51 @@ if _FLIGHT_AVAILABLE:
             self._client.close()
 
 
-# -- multi-database HTTP facade ---------------------------------------------
+# -- multi-database HTTP API -------------------------------------------------
 
 
-_LP_TS = __import__("re").compile(rb"^(.*) (-?\d+)[ \t]*(\r?)$")
+#: gRPC status of an IoxServer write/delete → HTTP status (default 400)
+_HTTP_STATUS = {"NotFound": 404, "Unavailable": 503, "ResourceExhausted": 429}
 
 
-def _scale_lp_timestamps(body: bytes, factor: int) -> bytes:
-    """Scale each line's trailing timestamp token by ``factor`` (the
-    write API's precision param).  The timestamp, when present, is always
-    the final whitespace-separated integer token of a line — quoted field
-    strings cannot end a line unescaped, so the anchored regex cannot
-    misfire inside one; lines without timestamps pass through (the server
-    assigns ns wall clock downstream).  CRLF-terminated lines (Windows
-    clients, HTTP tooling) scale too — the split is on \\n, so the \\r
-    rides as line tail and is preserved after the scaled timestamp."""
-    out = []
-    for line in body.split(b"\n"):
-        m = _LP_TS.match(line)
-        if m:
-            line = (
-                m.group(1) + b" "
-                + str(int(m.group(2)) * factor).encode() + m.group(3)
-            )
-        out.append(line)
-    return b"\n".join(out)
+def _http_call(fn, *args):
+    from influxdb_iox_spark.http_api import _HttpError
+
+    try:
+        return fn(*args)
+    except GrpcStatusError as e:
+        raise _HttpError(_HTTP_STATUS.get(e.code, 400), e.message) from e
 
 
-class IoxMultiDbHttpServer:
-    """The v2 HTTP API over an IoxServer's LIVE database set — write to any
+class IoxMultiDbHttpServer(IoxHttpServer):
+    """The HTTP API over an IoxServer's LIVE database set — write to any
     '<org>_<bucket>' database (schema inferred like the gRPC write path)
     and query any database by name, exactly how the reference's HTTP
-    router resolves databases per request (http.rs:462-660).  Reuses the
-    single-db facade's request handler; only routing differs."""
-
-    DEFAULT_MAX_ROWS = 10_000
+    router resolves databases per request (http.rs:462-660).  Every route
+    is IoxHttpServer's; this class supplies only the database hooks.
+    Writes and deletes go through IoxServer, so write-buffer replication,
+    routing and the immutable-database check apply.  No database is the
+    default: a db-less v1 request selects none."""
 
     def __init__(
         self,
         server: IoxServer,
-        max_rows: int = DEFAULT_MAX_ROWS,
+        max_rows: int = IoxHttpServer.DEFAULT_MAX_ROWS,
         users: dict[str, str] | None = None,
     ):
         self.server = server
-        self.max_rows = max_rows
-        #: user -> password; None = anonymous (see IoxHttpServer.users).
-        #: An auth.UserRegistry here adds per-statement privileges and the
-        #: user-management statements, like the single-db facade.
-        self.users = users
-        self.registry = users if hasattr(users, "create_user") else None
-        from influxdb_iox_spark.query_tracker import QueryTracker
-        from influxdb_iox_spark.subscriptions import SubscriptionRegistry
+        self._init_api(server.spark, None, max_rows, users)
 
-        self.tracker = QueryTracker(server.spark)
-        self.subscriptions = SubscriptionRegistry()
-        self._httpd = None
-        self._thread = None
-        self.metrics: dict[str, int] = {
-            "ingest_lines_total": 0,
-            "ingest_points_bytes_total": 0,
-        }
-        self.request_counts: dict[tuple[str, int], int] = {}
-
-    def start(self, host: str = "127.0.0.1", port: int = 0) -> int:
-        from http.server import ThreadingHTTPServer
-
-        from influxdb_iox_spark.http_api import _make_handler
-
-        self._httpd = ThreadingHTTPServer((host, port), _make_handler(self))
-        self._thread = threading.Thread(
-            target=self._httpd.serve_forever, daemon=True
-        )
-        self._thread.start()
-        return self._httpd.server_address[1]
-
-    def stop(self) -> None:
-        if self._httpd is not None:
-            self._httpd.shutdown()
-            self._httpd.server_close()
-            self._httpd = None
-
-    def handle_write(
-        self, org: str, bucket: str, body: bytes,
-        precision: str | None = None,
-    ) -> None:
-        from influxdb_iox_spark.http_api import (
-            IoxHttpServer,
-            _HttpError,
-            org_and_bucket_to_database,
-        )
-
-        name = org_and_bucket_to_database(org, bucket)
-        if precision is not None and precision not in IoxHttpServer.PRECISION_NS:
-            raise _HttpError(400, f"invalid precision {precision!r}")
-        factor = IoxHttpServer.PRECISION_NS.get(precision or "ns", 1)
-        if factor != 1:
-            body = _scale_lp_timestamps(body, factor)
-        try:
-            n = self.server.write_lp(name, body.decode("utf-8"))
-        except GrpcStatusError as e:
-            status = {
-                "NotFound": 404,
-                "Unavailable": 503,
-                "ResourceExhausted": 429,
-            }.get(e.code, 400)
-            raise _HttpError(status, e.message)
-        self.metrics["ingest_lines_total"] += n
-        self.metrics["ingest_points_bytes_total"] += len(body)
-        # body is already ns-scaled here; forward without precision
-        self.subscriptions.notify_write(name, body, None)
-
-    # -- InfluxDB 1.x API over the live database set -------------------------
-    def _resolve_database(self, name: str):
-        """DDL target lookup by STATEMENT name (not the db= param):
-        ``DROP DATABASE b`` must resolve b even when the connection
-        selected database a."""
+    def _database(self, name: str | None) -> Database | None:
         md = self.server.databases.get(name)
         return md.database if md is not None else None
 
-    def _v1_database(self, db: str | None):
-        from influxdb_iox_spark.http_api import _HttpError
+    def _database_names(self) -> list[str]:
+        return sorted(self.server.databases)
 
-        if not db:
-            return None  # db-less SHOW DATABASES etc. still answer
-        md = self.server.databases.get(db)
-        if md is None:
-            raise _HttpError(404, f"database not found: {db}")
-        return md.database
+    def _commit_write(self, name: str, text: str) -> int:
+        return _http_call(self.server.write_lp, name, text)
 
-    def handle_v1_query(
-        self, db: str | None, q: str, epoch: str | None,
-        read_only: bool = False,
-        accept: str | None = None,
-        identity: str | None = None,
-    ) -> tuple[bytes, str]:
-        """GET/POST /query against ANY hosted database (the 1.x API's
-        ``db`` param picks it); same envelope/CSV semantics as the
-        single-db server."""
-        from influxdb_iox_spark.http_api import _HttpError
-        from influxdb_iox_spark.influxql.v1_api import (
-            catalog_from_database,
-            render_csv,
-            run_statements,
-        )
-
-        database = self._v1_database(db)
-        want_csv = accept is not None and "application/csv" in accept
-        if want_csv and epoch is None:
-            epoch = "ns"
-        qid = self.tracker.begin(q, db)
-        try:
-            envelope = run_statements(
-                q,
-                catalog_from_database(database) if database else {},
-                databases=sorted(self.server.databases),
-                epoch=epoch,
-                max_rows=self.max_rows,
-                database=database,
-                read_only=read_only,
-                resolve_database=self._resolve_database,
-                registry=self.registry,
-                identity=identity,
-                selected_db=db,
-                tracker=self.tracker,
-                subscriptions=self.subscriptions,
-            )
-        except ValueError as e:  # bad epoch
-            raise _HttpError(400, str(e))
-        finally:
-            self.tracker.end(qid)
-        if want_csv:
-            return render_csv(envelope), "application/csv"
-        return json.dumps(envelope).encode(), "application/json"
-
-    def iter_v1_query_chunks(
-        self, db: str | None, q: str, epoch: str | None,
-        chunk_size: int, read_only: bool = False,
-        identity: str | None = None,
-    ):
-        from influxdb_iox_spark.http_api import _HttpError
-        from influxdb_iox_spark.influxql.v1_api import (
-            _EPOCH_DIV,
-            catalog_from_database,
-            run_statements_chunked,
-        )
-
-        database = self._v1_database(db)
-        if chunk_size <= 0:
-            raise _HttpError(400, "chunk_size must be positive")
-        if epoch is not None and epoch not in _EPOCH_DIV:
-            raise _HttpError(400, f"invalid epoch {epoch!r}")
-        def _tracked():
-            qid = self.tracker.begin(q, db)
-            try:
-                yield from run_statements_chunked(
-                    q,
-                    catalog_from_database(database) if database else {},
-                    databases=sorted(self.server.databases),
-                    epoch=epoch,
-                    chunk_size=chunk_size,
-                    database=database,
-                    read_only=read_only,
-                    max_rows=self.max_rows,
-                    resolve_database=self._resolve_database,
-                    registry=self.registry,
-                    identity=identity,
-                    selected_db=db,
-                    tracker=self.tracker,
-                    subscriptions=self.subscriptions,
-                )
-            finally:
-                self.tracker.end(qid)
-
-        return _tracked()
-
-    def handle_write_v1(
-        self, db: str | None, body: bytes, precision: str | None = None
-    ) -> None:
-        """POST /write?db=...&precision=... routed to the named hosted
-        database (the 1.x client-library write path)."""
-        from influxdb_iox_spark.http_api import IoxHttpServer, _HttpError
-
-        if not db:
-            raise _HttpError(400, "db parameter is required")
-        if db not in self.server.databases:
-            raise _HttpError(404, f"database not found: {db}")
-        if precision is not None and precision not in IoxHttpServer.PRECISION_NS:
-            raise _HttpError(400, f"invalid precision {precision!r}")
-        factor = IoxHttpServer.PRECISION_NS.get(precision or "ns", 1)
-        if factor != 1:
-            body = _scale_lp_timestamps(body, factor)
-        try:
-            n = self.server.write_lp(db, body.decode("utf-8"))
-        except GrpcStatusError as e:
-            status = {
-                "NotFound": 404,
-                "Unavailable": 503,
-                "ResourceExhausted": 429,
-            }.get(e.code, 400)
-            raise _HttpError(status, e.message)
-        self.metrics["ingest_lines_total"] += n
-        self.metrics["ingest_points_bytes_total"] += len(body)
-        # body is already ns-scaled here; forward without precision
-        self.subscriptions.notify_write(db, body, None)
-
-    def handle_query(self, name: str, q: str, fmt: str) -> tuple[bytes, str]:
-        from influxdb_iox_spark.http_api import (
-            QUERY_FORMATS,
-            _HttpError,
-            render_query_result,
-        )
-
-        md = self.server.databases.get(name)
-        if md is None:
-            raise _HttpError(404, f"database {name!r} not found")
-        if fmt not in QUERY_FORMATS:
-            raise _HttpError(400, f"unknown format {fmt!r}")
-        df = md.database.query(q)
-        rows = df.limit(self.max_rows + 1).collect()
-        if len(rows) > self.max_rows:
-            raise _HttpError(
-                413,
-                f"result exceeds max_rows={self.max_rows}; "
-                "add a LIMIT clause or page the query",
-            )
-        return render_query_result(df.columns, rows, fmt)
-
-    def render_metrics(self) -> bytes:
-        out = []
-        for name, v in sorted(self.metrics.items()):
-            out.append(f"# TYPE {name} counter")
-            out.append(f"{name} {v}")
-        for (path, status), v in sorted(self.request_counts.items()):
-            out.append(
-                f'http_requests_total{{path="{path}",status="{status}"}} {v}'
-            )
-        for db_name, md in sorted(self.server.databases.items()):
-            for table, fams in sorted(md.database.store.prune_metrics.items()):
-                for fam, v in sorted(fams.items()):
-                    out.append(
-                        f'{fam}{{db_name="{db_name}",table_name="{table}"}} {v}'
-                    )
-        return ("\n".join(out) + "\n").encode()
+    def _commit_delete(self, name: str, tables: list[str], dp) -> None:
+        for t in tables:
+            _http_call(self.server.delete_rows, name, t, dp)

@@ -22,6 +22,7 @@ table name / column value / strftime of time.
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -109,31 +110,20 @@ class LineProtocolIngest:
         lines_df: DataFrame,
         parse_counter=None,
         default_time_ns: int | None = None,
-        precision_factor: int = 1,
     ) -> DataFrame:
         """Phase 1: parse + materialize (localCheckpoint) WITHOUT writing.
 
         Parse/validation errors surface here, before any chunk lands — a
-        multi-measurement caller (e.g. the HTTP write handler) can parse
-        every measurement first and only then commit, so a rejected request
-        persists nothing.
-
-        ``precision_factor``: line timestamps arrive in a coarser unit
-        (the write API's ``precision`` param) and scale to ns BEFORE the
-        partition key derives from them; server-assigned defaults must be
-        passed already-truncated to the precision (``now_ns // factor``),
-        so they scale back to stock's truncated-to-precision wall clock.
+        multi-measurement caller (``commit_lines``) can parse every
+        measurement first and only then commit, so a rejected request
+        persists nothing.  Timestamps are ns; a line without one gets
+        ``default_time_ns``.
         """
         parsed = distributed_parse(
             lines_df, self.schema, self.table,
             self.default_time_ns if default_time_ns is None else default_time_ns,
             batch_counter=parse_counter,
         )
-        if precision_factor != 1:
-            tc = self.schema.time_column
-            parsed = parsed.withColumn(
-                tc, (F.col(tc) * F.lit(precision_factor)).cast("long")
-            )
         return parsed.withColumn(
             "__part_key", self.template.key_column(self.table, self.schema.time_column)
         ).localCheckpoint(eager=True)
@@ -149,7 +139,7 @@ class LineProtocolIngest:
 
         With ``register=False`` the chunks are written but not yet visible;
         the caller registers them later (``TableStore.register_chunks``) —
-        used by the HTTP handler to make a multi-measurement request's
+        used by ``commit_lines`` to make a multi-measurement request's
         visibility all-or-nothing.
         """
         return self.store.write_chunks_partitioned(
@@ -187,3 +177,24 @@ class LineProtocolIngest:
         if trigger_once:
             writer = writer.trigger(availableNow=True)
         return writer.start()
+
+
+def commit_lines(ingests, lines_df: DataFrame) -> None:
+    """All-or-nothing commit of one batch of line protocol (one ``value``
+    string column) into every table of ``ingests``, like the reference's
+    write handler:
+
+    1. parse and validate the batch for EVERY table (an error raises and
+       nothing is persisted);
+    2. write every table's chunk files without registering them;
+    3. register all manifest entries.
+
+    A failure in 1-2 leaves at most unreferenced chunk directories
+    (GC-able) and NOTHING visible to queries.  Lines without a timestamp
+    get the commit's wall-clock ns.  The caller serializes commits to one
+    store: manifest append and chunk-id allocation are single-writer."""
+    now = time.time_ns()
+    parsed = [(ing, ing.parse_lines_df(lines_df, default_time_ns=now)) for ing in ingests]
+    written = [(ing, ing.write_parsed(keyed, register=False)) for ing, keyed in parsed]
+    for ing, metas in written:
+        ing.store.register_chunks(ing.table, metas)

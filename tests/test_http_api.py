@@ -544,3 +544,79 @@ def test_anonymous_server_unaffected(server):
     assert _status_of(
         f"{server}/api/v2/write?org=myorg&bucket=mybucket", body=lines
     ) == 204
+
+
+# -- both constructions: the fixed-database facade and the live server ------
+
+
+@pytest.fixture(params=["single", "multi"])
+def either_server(request, spark, tmp_path):
+    """Base URL of database myorg_mybucket (table cpu) served by
+    IoxHttpServer over a fixed database, or by IoxMultiDbHttpServer over
+    an IoxServer."""
+    if request.param == "single":
+        store = TableStore(str(tmp_path / "http_store"))
+        db = Database("myorg_mybucket", store, spark)
+        db.register_table("cpu", CPU)
+        api = IoxHttpServer(
+            db, {"cpu": LineProtocolIngest(store, "cpu", CPU)},
+            db_name="myorg_mybucket",
+        )
+    else:
+        from influxdb_iox_spark.rpc_management import (
+            IoxMultiDbHttpServer,
+            IoxServer,
+        )
+
+        server = IoxServer(spark, str(tmp_path / "iox"))
+        server.create_database(
+            {"name": "myorg_mybucket",
+             "partition_template": {"parts": [{"table": {}}]}}
+        )
+        api = IoxMultiDbHttpServer(server)
+    port = api.start()
+    yield f"http://127.0.0.1:{port}"
+    api.stop()
+
+
+def _sql(base, q):
+    url = (f"{base}/iox/api/v1/databases/myorg_mybucket/query"
+           f"?q={urllib.request.quote(q)}&format=json")
+    with urllib.request.urlopen(url, timeout=120) as r:
+        return json.loads(r.read())
+
+
+def test_precision_truncates_server_time(either_server):
+    """A point without a timestamp gets the server clock truncated to
+    the request's precision, on both write routes."""
+    import time
+
+    before = time.time_ns()
+    with _post(f"{either_server}/api/v2/write?org=myorg&bucket=mybucket"
+               "&precision=s", b"cpu,region=west user=1.0") as r:
+        assert r.status == 204
+    with _post(f"{either_server}/write?db=myorg_mybucket&precision=ms",
+               b"cpu,region=east user=2.0\n") as r:
+        assert r.status == 204
+    after = time.time_ns()
+    rows = {r["region"]: r["time"] for r in _sql(either_server, "SELECT region, time FROM cpu")}
+    assert rows["west"] % 10**9 == 0
+    assert before // 10**9 * 10**9 <= rows["west"] <= after
+    assert rows["east"] % 10**6 == 0
+    assert before // 10**6 * 10**6 <= rows["east"] <= after
+
+
+def test_delete_then_query(either_server):
+    """POST /api/v2/delete answers 204 and the deleted rows are gone
+    from the next query."""
+    lines = b"cpu,region=west user=1.0 100\ncpu,region=east user=2.0 200\n"
+    with _post(f"{either_server}/api/v2/write?org=myorg&bucket=mybucket", lines) as r:
+        assert r.status == 204
+    body = json.dumps({
+        "start": "1970-01-01T00:00:00Z",
+        "stop": "1970-01-01T00:00:01Z",
+        "predicate": 'region="west"',
+    }).encode()
+    with _post(f"{either_server}/api/v2/delete?org=myorg&bucket=mybucket", body) as r:
+        assert r.status == 204
+    assert _sql(either_server, "SELECT region FROM cpu") == [{"region": "east"}]

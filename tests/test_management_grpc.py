@@ -1139,18 +1139,71 @@ def test_scale_lp_timestamps_crlf():
     """CRLF-terminated line protocol (Windows clients, curl -d with \r\n)
     must scale precision timestamps too — the \r rides as preserved line
     tail, not as a scaling-defeating mismatch."""
-    from influxdb_iox_spark.rpc_management import _scale_lp_timestamps
+    from influxdb_iox_spark.http_api import _scale_lp_timestamps
 
     body = b"cpu,host=a v=1.0 100\r\ncpu,host=b v=2.0 200\r\n"
-    out = _scale_lp_timestamps(body, 10**9)
+    out = _scale_lp_timestamps(body, 10**9, 0)
     assert out == (
         b"cpu,host=a v=1.0 100000000000\r\n"
         b"cpu,host=b v=2.0 200000000000\r\n"
     )
-    # LF-only and no-timestamp lines unchanged in behavior
-    assert _scale_lp_timestamps(b"cpu v=1 5\ncpu v=2", 1000) == (
-        b"cpu v=1 5000\ncpu v=2"
+    # LF-only lines scale; a line without a timestamp is stamped with
+    # the clock truncated to the precision; blank and comment lines pass
+    assert _scale_lp_timestamps(
+        b"cpu v=1 5\ncpu v=2\r\n\n# note", 1000, 123_456_789
+    ) == b"cpu v=1 5000\ncpu v=2 123456000\r\n\n# note"
+
+
+def test_multi_db_http_delete_replicates(srv, tmp_path):
+    """POST /api/v2/delete on the multi-db server goes through
+    IoxServer.delete_rows, so the delete reaches the write buffer and a
+    replica draining it deletes the same rows."""
+    import json as _json
+    import urllib.request
+
+    from influxdb_iox_spark.rpc_management import IoxMultiDbHttpServer
+
+    server, _port = srv
+    buf_dir = str(tmp_path / "wb")
+    server.create_database(
+        {"name": "del_b", "partition_template": {"parts": [{"table": {}}]}}
     )
+    server.databases["del_b"].rules["writing"] = buf_dir
+    http = IoxMultiDbHttpServer(server)
+    port = http.start()
+    base = f"http://127.0.0.1:{port}"
+    try:
+        req = urllib.request.Request(
+            f"{base}/api/v2/write?org=del&bucket=b",
+            data=b"cpu,region=west user=1.0 100\ncpu,region=east user=2.0 200",
+        )
+        with urllib.request.urlopen(req, timeout=120) as r:
+            assert r.status == 204
+        req = urllib.request.Request(
+            f"{base}/api/v2/delete?org=del&bucket=b",
+            data=_json.dumps({
+                "start": "1970-01-01T00:00:00Z",
+                "stop": "1970-01-01T00:00:01Z",
+                "predicate": '_measurement="cpu" AND region="west"',
+            }).encode(),
+        )
+        with urllib.request.urlopen(req, timeout=120) as r:
+            assert r.status == 204
+        assert [r.region for r in server.databases["del_b"].database.table("cpu").collect()] == ["east"]
+    finally:
+        http.stop()
+
+    replica = IoxServer(server.spark, str(tmp_path / "replica"))
+    replica.create_database(
+        {
+            "name": "del_b",
+            "partition_template": {"parts": [{"table": {}}]},
+            "reading": buf_dir,
+        }
+    )
+    replica.drain_write_buffer("del_b")
+    rows = replica.databases["del_b"].database.table("cpu").collect()
+    assert [r.region for r in rows] == ["east"]
 
 
 def test_multi_db_drop_database_targets_statement_name(srv):

@@ -92,13 +92,17 @@ def test_tracker_emits_structured_log_lines(spark):
     )[0].replace('db=""', "")
 
 
-def test_http_query_logs_row_count(spark, tmp_path):
+@pytest.mark.parametrize("construction", ["single", "multi"])
+def test_http_query_logs_row_count(spark, tmp_path, construction):
     """The v1 endpoint wires envelope row counts into the query_end line
-    (captured via the default stdlib logger, the production sink)."""
+    (captured via the default stdlib logger, the production sink), and a
+    request rejected for a bad epoch ends with status=error — on both
+    server constructions."""
     import logging
 
     from influxdb_iox_spark.database import Database
-    from influxdb_iox_spark.http_api import IoxHttpServer
+    from influxdb_iox_spark.http_api import IoxHttpServer, _HttpError
+    from influxdb_iox_spark.rpc_management import IoxMultiDbHttpServer, IoxServer
     from influxdb_iox_spark.schema import InfluxColumnType, IoxSchema
     from influxdb_iox_spark.sources.store import TableStore
 
@@ -113,24 +117,40 @@ def test_http_query_logs_row_count(spark, tmp_path):
     logger.addHandler(h)
     logger.setLevel(logging.INFO)
     try:
-        cpu = IoxSchema.build(
-            ["region"], {"user": InfluxColumnType.FIELD_FLOAT}
-        )
-        store = TableStore(str(tmp_path / "log_store"))
-        db = Database("db0", store, spark)
-        db.register_table("cpu", cpu)
-        store.write_chunk(
-            spark.createDataFrame(
-                [("west", 1.0, 100), ("east", 2.0, 200)],
-                "region string, user double, time long",
-            ),
-            "cpu", cpu, partition_key="p",
-        )
-        api = IoxHttpServer(db, {}, db_name="db0")
-        api.handle_v1_query(None, "SELECT user FROM cpu", None)
+        if construction == "single":
+            cpu = IoxSchema.build(
+                ["region"], {"user": InfluxColumnType.FIELD_FLOAT}
+            )
+            store = TableStore(str(tmp_path / "log_store"))
+            db = Database("db0", store, spark)
+            db.register_table("cpu", cpu)
+            store.write_chunk(
+                spark.createDataFrame(
+                    [("west", 1.0, 100), ("east", 2.0, 200)],
+                    "region string, user double, time long",
+                ),
+                "cpu", cpu, partition_key="p",
+            )
+            api = IoxHttpServer(db, {}, db_name="db0")
+            selected = None  # db-less: the server's one database
+        else:
+            server = IoxServer(spark, str(tmp_path / "iox"))
+            server.create_database(
+                {"name": "db0", "partition_template": {"parts": [{"table": {}}]}}
+            )
+            server.write_lp("db0", "cpu,region=west user=1.0 100\ncpu,region=east user=2.0 200")
+            api = IoxMultiDbHttpServer(server)
+            selected = "db0"
+        api.handle_v1_query(selected, "SELECT user FROM cpu", None)
         end_lines = [r for r in records if "event=query_end" in r]
         assert end_lines and "rows=2" in end_lines[-1]
         assert "status=ok" in end_lines[-1] and "db=db0" in end_lines[-1]
+
+        with pytest.raises(_HttpError) as e:
+            api.handle_v1_query(selected, "SELECT user FROM cpu", "fortnight")
+        assert e.value.status == 400
+        end_lines = [r for r in records if "event=query_end" in r]
+        assert "status=error" in end_lines[-1]
     finally:
         logger.removeHandler(h)
 
