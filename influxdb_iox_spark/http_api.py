@@ -259,10 +259,13 @@ class IoxHttpServer:
         pruning access metrics (GET /metrics, http.rs:678 handle_metrics)."""
         label = f'{{db_name="{self.db_name}"}}' if self.db_name else ""
         out = []
-        for name, v in sorted(self.metrics.items()):
+        with self._metrics_lock:
+            metrics = sorted(self.metrics.items())
+            request_counts = sorted(self.request_counts.items())
+        for name, v in metrics:
             out.append(f"# TYPE {name} counter")
             out.append(f"{name}{label} {v}")
-        for (path, status), v in sorted(self.request_counts.items()):
+        for (path, status), v in request_counts:
             out.append(
                 f'http_requests_total{{path="{path}",status="{status}"}} {v}'
             )
@@ -625,12 +628,16 @@ def _make_handler(api: IoxHttpServer):
             body = json.dumps({"error": message, "error_code": 100}).encode()
             self._reply(status, body, "application/json")
 
+        def _count(self, status: int):
+            key = (urlparse(self.path).path, status)
+            with api._metrics_lock:
+                api.request_counts[key] = api.request_counts.get(key, 0) + 1
+
         def _reply(
             self, status: int, body: bytes = b"", ctype: str = "text/plain",
             headers_extra=(),
         ):
-            key = (urlparse(self.path).path, status)
-            api.request_counts[key] = api.request_counts.get(key, 0) + 1
+            self._count(status)
             self.send_response(status)
             self.send_header("Content-Type", ctype)
             self.send_header("Content-Length", str(len(body)))
@@ -643,8 +650,7 @@ def _make_handler(api: IoxHttpServer):
         def _reply_chunked(self, docs):
             """Stream newline-separated JSON documents with HTTP/1.1
             chunked transfer encoding (stock's chunked=true framing)."""
-            key = (urlparse(self.path).path, 200)
-            api.request_counts[key] = api.request_counts.get(key, 0) + 1
+            self._count(200)
             self.send_response(200)
             self.send_header("Content-Type", "application/json")
             self.send_header("Transfer-Encoding", "chunked")

@@ -14,11 +14,18 @@ Plan shapes are the reference's SQL-equivalents expressed as DataFrame ops:
   read_window_aggregate:  SELECT tags…, window_bounds(time), agg(field)…
                           GROUP BY tags…, window ORDER BY tags…, window
 
-Scale note: the ORDER BY exists to make series rows contiguous for framing.
-It is a range-partitioned global sort — fine, but when the consumer only
-needs per-series grouping (not a global order), ``frame_series_distributed``
-uses ``repartition(tags) + sortWithinPartitions`` instead, which skips the
-global exchange's sampling pass and keeps each series on one executor.
+Each shape has one plan function (``*_plan``, or ``read_filter_projection``)
+that returns the rows UNORDERED, and a sorted twin that adds the ORDER BY for
+direct callers.  The served path (``InfluxRpc`` → ``rpc_storage``) takes the
+unordered plans: ``frame_series`` collects the result once as Arrow and sorts
+it on the driver, so a request runs no range-partition exchange and no
+sampling job.
+
+Scale note: ``frame_series`` holds a whole response on the driver as Arrow
+columns (tens of bytes per row) — the served responses are bounded by the
+request's predicate.  A consumer that must not funnel rows through the
+driver uses ``frame_series_distributed``, which frames series on executors
+(``repartition(tags) + sortWithinPartitions``).
 """
 
 from __future__ import annotations
@@ -27,6 +34,9 @@ from collections.abc import Iterator
 from dataclasses import dataclass
 from enum import Enum
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, functions as F
 
 from influxdb_iox_spark.database import Database
@@ -89,9 +99,9 @@ def _field_agg(agg: Aggregate, fld: str, time_col: str, selector: bool) -> list[
 def read_filter_projection(
     db: Database, table: str, predicate: Predicate | None = None
 ) -> DataFrame:
-    """The (tags…, fields…, time) projection shared by read_filter and the
-    distributed framing path — UNSORTED (each consumer picks its own
-    ordering strategy).
+    """The (tags…, fields…, time) projection, UNSORTED — the read_filter
+    plan, shared by the served path, ``read_filter`` and the
+    distributed framing path (each consumer picks its own ordering).
 
     A field projection is intersected with the table's OWN fields: the wire
     predicate's ``_field`` list spans every measurement of the request, so
@@ -123,29 +133,26 @@ def read_filter(
     return df.orderBy(*schema.tag_columns, schema.time_column)
 
 
-def read_group(
+def _group_order(schema, group_columns: list[str] | None) -> list[str]:
+    """Group columns first, remaining tags after — prefix reordering
+    (influxrpc.rs:1265-1299)."""
+    group_columns = group_columns or []
+    return [*group_columns, *[t for t in schema.tag_columns if t not in group_columns]]
+
+
+def read_group_plan(
     db: Database,
     table: str,
     agg: Aggregate,
     group_columns: list[str] | None = None,
     predicate: Predicate | None = None,
 ) -> DataFrame:
-    """Per-series aggregate with group-column-prefix ordering
-    (influxrpc.rs:558-607; SQL-equivalent :898-927).
-
-    agg=NONE degrades to read_filter with the sort reordered so the group
-    columns form the prefix (influxrpc.rs:580-597, prefix reorder
-    :1265-1299).
-    """
+    """Per-series aggregate, unordered (influxrpc.rs:558-607;
+    SQL-equivalent :898-927).  agg=NONE degrades to the read_filter
+    projection (influxrpc.rs:580-597)."""
     schema = db.table_schema(table)
-    group_columns = group_columns or []
-    tags = schema.tag_columns
-    # group columns first, remaining tags after — prefix reordering
-    ordered_tags = [*group_columns, *[t for t in tags if t not in group_columns]]
-
     if agg is Aggregate.NONE:
-        df = read_filter(db, table, predicate)
-        return df.orderBy(*ordered_tags, schema.time_column)
+        return read_filter_projection(db, table, predicate)
 
     fields = predicate.field_columns if predicate and predicate.field_columns else None
     fields = fields or schema.field_columns
@@ -160,10 +167,64 @@ def read_group(
         # and make_agg_expr maps the time column to Max, :1409-1423).
         # Selector aggregates instead carry per-field <field>_time pairs.
         aggs.append(F.max(F.col(schema.time_column)).alias(schema.time_column))
-    out = df.groupBy(*ordered_tags).agg(*aggs)
+    return df.groupBy(*_group_order(schema, group_columns)).agg(*aggs)
+
+
+def read_group(
+    db: Database,
+    table: str,
+    agg: Aggregate,
+    group_columns: list[str] | None = None,
+    predicate: Predicate | None = None,
+) -> DataFrame:
+    """``read_group_plan`` ordered by the group-column prefix, then the
+    remaining tags (and time, for agg=NONE)."""
+    schema = db.table_schema(table)
+    order = _group_order(schema, group_columns)
+    if agg is Aggregate.NONE:
+        order = [*order, schema.time_column]
+    df = read_group_plan(db, table, agg, group_columns, predicate)
     # a tag-less measurement aggregates to one global row — orderBy would
     # reject an empty column list
-    return out.orderBy(*ordered_tags) if ordered_tags else out
+    return df.orderBy(*order) if order else df
+
+
+def _window_plan(
+    db: Database,
+    table: str,
+    agg: Aggregate,
+    bucket: Column,
+    predicate: Predicate | None,
+) -> DataFrame:
+    """GROUP BY (all tags, bucket) with one aggregate per field, unordered."""
+    schema = db.table_schema(table)
+    fields = predicate.field_columns if predicate and predicate.field_columns else None
+    fields = fields or schema.field_columns
+    # FIRST/LAST are selectors even per-window (value at earliest/latest
+    # timestamp INSIDE the window, plus that timestamp); sum/count/min/max/
+    # mean stay plain per the reference's window aggregate menu.
+    selector = agg in (Aggregate.FIRST, Aggregate.LAST)
+    aggs: list[Column] = []
+    for fld in fields:
+        aggs.extend(_field_agg(agg, fld, schema.time_column, selector=selector))
+    return db.table(table, predicate).groupBy(*schema.tag_columns, bucket).agg(*aggs)
+
+
+def read_window_aggregate_plan(
+    db: Database,
+    table: str,
+    agg: Aggregate,
+    every_ns: int,
+    offset_ns: int = 0,
+    predicate: Predicate | None = None,
+    time_alias: str = "time",
+) -> DataFrame:
+    """GROUP BY (all tags, window) with the window's END boundary reported as
+    ``time``, unordered (influxrpc.rs:611-650; SQL-equivalent :1006-1018;
+    stop-boundary semantics query/src/func/window.rs:44-47)."""
+    time_column = db.table_schema(table).time_column
+    bucket = window_bounds(time_column, every_ns, offset_ns).alias(time_alias)
+    return _window_plan(db, table, agg, bucket, predicate)
 
 
 def read_window_aggregate(
@@ -175,27 +236,35 @@ def read_window_aggregate(
     predicate: Predicate | None = None,
     time_alias: str = "time",
 ) -> DataFrame:
-    """GROUP BY (all tags, window) with the window's END boundary reported as
-    ``time`` (influxrpc.rs:611-650; SQL-equivalent :1006-1018; stop-boundary
-    semantics query/src/func/window.rs:44-47)."""
-    schema = db.table_schema(table)
-    fields = predicate.field_columns if predicate and predicate.field_columns else None
-    fields = fields or schema.field_columns
-    tags = schema.tag_columns
-    df = db.table(table, predicate)
-    bucket = window_bounds(schema.time_column, every_ns, offset_ns).alias(time_alias)
-    aggs: list[Column] = []
-    # FIRST/LAST are selectors even per-window (value at earliest/latest
-    # timestamp INSIDE the window, plus that timestamp); sum/count/min/max/
-    # mean stay plain per the reference's window aggregate menu.
-    selector = agg in (Aggregate.FIRST, Aggregate.LAST)
-    for fld in fields:
-        aggs.extend(_field_agg(agg, fld, schema.time_column, selector=selector))
-    return (
-        df.groupBy(*tags, bucket)
-        .agg(*aggs)
-        .orderBy(*tags, time_alias)
+    """``read_window_aggregate_plan`` ordered by (tags…, window)."""
+    df = read_window_aggregate_plan(
+        db, table, agg, every_ns, offset_ns, predicate, time_alias
     )
+    return df.orderBy(*db.table_schema(table).tag_columns, time_alias)
+
+
+def read_window_aggregate_months_plan(
+    db: Database,
+    table: str,
+    agg: Aggregate,
+    every_months: int,
+    offset_months: int = 0,
+    predicate: Predicate | None = None,
+    time_alias: str = "time",
+) -> DataFrame:
+    """read_window_aggregate_plan with CALENDAR-MONTH windows — the
+    Duration::Variable arm of the reference's WindowEvery
+    (query/src/group_by.rs:70-76 feeding influxrpc.rs:611-650); offsets may
+    be negative (from_months_with_negative)."""
+    from influxdb_iox_spark.functions.time import month_window_bounds_struct
+
+    time_column = db.table_schema(table).time_column
+    bucket = (
+        month_window_bounds_struct(time_column, every_months, offset_months)
+        .getField("stop")
+        .alias(time_alias)
+    )
+    return _window_plan(db, table, agg, bucket, predicate)
 
 
 def read_window_aggregate_months(
@@ -207,27 +276,11 @@ def read_window_aggregate_months(
     predicate: Predicate | None = None,
     time_alias: str = "time",
 ) -> DataFrame:
-    """read_window_aggregate with CALENDAR-MONTH windows — the
-    Duration::Variable arm of the reference's WindowEvery
-    (query/src/group_by.rs:70-76 feeding influxrpc.rs:611-650); offsets may
-    be negative (from_months_with_negative)."""
-    from influxdb_iox_spark.functions.time import month_window_bounds_struct
-
-    schema = db.table_schema(table)
-    fields = predicate.field_columns if predicate and predicate.field_columns else None
-    fields = fields or schema.field_columns
-    tags = schema.tag_columns
-    df = db.table(table, predicate)
-    bucket = (
-        month_window_bounds_struct(schema.time_column, every_months, offset_months)
-        .getField("stop")
-        .alias(time_alias)
+    """``read_window_aggregate_months_plan`` ordered by (tags…, window)."""
+    df = read_window_aggregate_months_plan(
+        db, table, agg, every_months, offset_months, predicate, time_alias
     )
-    selector = agg in (Aggregate.FIRST, Aggregate.LAST)
-    aggs: list[Column] = []
-    for fld in fields:
-        aggs.extend(_field_agg(agg, fld, schema.time_column, selector=selector))
-    return df.groupBy(*tags, bucket).agg(*aggs).orderBy(*tags, time_alias)
+    return df.orderBy(*db.table_schema(table).tag_columns, time_alias)
 
 
 # ---------------------------------------------------------------------------
@@ -241,7 +294,7 @@ class SeriesFrame:
 
     table: str
     tags: dict[str, str]
-    rows: list  # list[Row] with field+time columns
+    rows: pa.Table  # the series' rows, every column, in time order
 
 
 def frame_series_distributed(
@@ -253,7 +306,7 @@ def frame_series_distributed(
     """Distributed series framing: one output row per series.
 
     The scale path of ``frame_series`` (exec/seriesset.rs:69-120): instead of
-    funneling every row through a serial driver iterator,
+    collecting every row on the driver,
     ``repartition(*tags)`` keeps each series wholly on one executor,
     ``sortWithinPartitions(tags…, time)`` makes its rows contiguous (no
     global exchange / range-sampling pass), and a ``mapInPandas`` pass frames
@@ -366,23 +419,36 @@ def series_limit(
 
 
 def frame_series(
-    df_sorted: DataFrame, table: str, tag_columns: list[str]
+    df: DataFrame, table: str, tag_columns: list[str], time_column: str = "time"
 ) -> Iterator[SeriesFrame]:
-    """Partition a (tags…, time)-sorted result into per-series frames.
+    """Cut a result into per-series frames (exec/seriesset.rs:69-120).
 
-    Streams via ``toLocalIterator`` — driver memory holds one series at a
-    time, mirroring the reference's batch-slicing executor rather than a
-    full collect.  For cluster-scale consumers use
-    ``frame_series_distributed``, which never touches the driver.
-    """
-    current_key: tuple | None = None
-    rows: list = []
-    for row in df_sorted.toLocalIterator():
-        key = tuple(row[t] for t in tag_columns)
-        if key != current_key:
-            if current_key is not None:
-                yield SeriesFrame(table, dict(zip(tag_columns, current_key)), rows)
-            current_key, rows = key, []
-        rows.append(row)
-    if current_key is not None:
-        yield SeriesFrame(table, dict(zip(tag_columns, current_key)), rows)
+    ``df`` need not be ordered: the result is collected once as Arrow
+    (``toArrow``) and sorted on the driver by (tags…, time) — ascending,
+    nulls first, Spark's ``orderBy`` order — then cut wherever the tag
+    key changes.  Series come out in that order, each row in time order;
+    ``time_column`` is left out of the sort when ``df`` lacks it."""
+    data = df.toArrow()
+    n = data.num_rows
+    if n == 0:
+        return
+    keys = [*tag_columns, time_column] if time_column in data.column_names else tag_columns
+    if keys:
+        order = pc.sort_indices(
+            data, sort_keys=[(k, "ascending") for k in keys], null_placement="at_start"
+        )
+        data = data.take(order)
+    # row i starts a series when any tag differs from row i-1 (null-safe)
+    starts = np.zeros(n, dtype=bool)
+    starts[0] = True
+    for t in tag_columns:
+        cur, prev = data.column(t).slice(1), data.column(t).slice(0, n - 1)
+        differs = pc.or_(
+            pc.fill_null(pc.not_equal(cur, prev), False),
+            pc.xor(pc.is_null(cur), pc.is_null(prev)),
+        )
+        starts[1:] |= differs.to_numpy(zero_copy_only=False)
+    bounds = [*np.flatnonzero(starts).tolist(), n]
+    for s, e in zip(bounds, bounds[1:]):
+        tags = {t: data.column(t)[s].as_py() for t in tag_columns}
+        yield SeriesFrame(table, tags, data.slice(s, e - s))

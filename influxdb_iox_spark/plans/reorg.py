@@ -79,7 +79,7 @@ def compact_chunks(
 
             ordered = [
                 store.apply_tombstones(
-                    store.read_chunk(spark, m), m.chunk_id, tomb,
+                    store.read_chunk(spark, m, schema), m.chunk_id, tomb,
                     schema.time_column,
                 ).withColumn(DEDUP_ORDER_COLUMN, F.lit(m.chunk_id))
                 for m in sorted(chunks, key=lambda m: m.chunk_id)
@@ -203,7 +203,7 @@ def _persist_split_inner(
 
         ordered = [
             store.apply_tombstones(
-                store.read_chunk(spark, m), m.chunk_id, tomb,
+                store.read_chunk(spark, m, schema), m.chunk_id, tomb,
                 schema.time_column,
             ).withColumn(DEDUP_ORDER_COLUMN, F.lit(m.chunk_id))
             for m in sorted(chunks, key=lambda m: m.chunk_id)

@@ -21,7 +21,8 @@ kinds:
 proto3 semantics honored: scalar defaults are omitted on encode and filled
 on decode; repeated numeric fields encode packed and decode both packed and
 unpacked; unknown fields are skipped by wire type; submessage presence is
-``None`` vs ``{}``.
+``None`` vs ``{}``.  A repeated 64-bit field given as a NumPy array packs
+straight from its buffer (the bulk ``points`` of a ReadResponse).
 """
 
 from __future__ import annotations
@@ -29,9 +30,13 @@ from __future__ import annotations
 import struct
 from dataclasses import dataclass
 
+import numpy as np
+
 _VARINT_KINDS = frozenset({"int32", "int64", "uint32", "uint64", "bool", "enum"})
 _SIGNED_KINDS = frozenset({"int32", "int64", "enum"})
 _I64_KINDS = frozenset({"double", "sfixed64", "fixed64"})
+#: little-endian NumPy dtype of each 64-bit kind (packed-array fast path)
+_I64_DTYPES = {"double": "<f8", "sfixed64": "<i8", "fixed64": "<u8"}
 _I32_KINDS = frozenset({"fixed32"})
 _LEN_KINDS = frozenset({"string", "bytes", "message"})
 
@@ -183,11 +188,14 @@ def encode_message(msg: dict, schema: dict[int, Field]) -> bytes:
         wt = _wire_type(f.kind)
         key = encode_varint((number << 3) | wt)
         if f.repeated:
-            if not value:
+            if len(value) == 0:
                 continue
             if f.kind in _VARINT_KINDS | _I64_KINDS | _I32_KINDS:
                 # packed: one length-delimited blob of raw scalars
-                body = b"".join(_encode_scalar(f.kind, v) for v in value)
+                if isinstance(value, np.ndarray) and f.kind in _I64_DTYPES:
+                    body = value.astype(_I64_DTYPES[f.kind], copy=False).tobytes()
+                else:
+                    body = b"".join(_encode_scalar(f.kind, v) for v in value)
                 out += encode_varint((number << 3) | _WT_LEN)
                 out += encode_varint(len(body))
                 out += body

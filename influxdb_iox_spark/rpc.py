@@ -5,7 +5,10 @@ The Spark twin of the reference's storage service + planner pairing
 query/src/frontend/influxrpc.rs).  Each method takes a Predicate and returns a
 DataFrame (or driver-side list for metadata ops), matching the reference's
 plan-then-execute split: the method builds the declarative plan, Spark executes
-it when the caller acts.
+it when the caller acts.  The data plans served to the wire
+(``read_filter_all``, ``read_group``, ``read_window_aggregate*``) are
+UNORDERED: ``operators/series.frame_series`` orders each result on the
+driver while framing it.
 
 Metadata ops consult the store's tag catalog first (the metadata-only fast
 path of influxrpc.rs:244-293,353-421 backed by chunk metadata; here a
@@ -117,7 +120,7 @@ class InfluxRpc:
         """The wire read_filter spans EVERY measurement in the bucket
         (service.rs:218 routes one request into per-table plans;
         read_filter.rs test_read_filter_data_no_pred expects h2o AND o2
-        series): table -> sorted series DataFrame.
+        series): table -> unordered (tags…, fields…, time) DataFrame.
 
         Only the predicate's TABLE list removes entries from the dict; a
         predicate referencing columns or fields a table lacks keeps the
@@ -129,14 +132,15 @@ class InfluxRpc:
         for t in sorted(self.db.schemas):
             if predicate is not None and not predicate.should_scan_table(t):
                 continue
-            out[t] = se.read_filter(self.db, t, predicate)
+            out[t] = se.read_filter_projection(self.db, t, predicate)
         return out
 
     def read_filter_frames_all(self, predicate: Predicate | None = None):
         """Driver-side frames across every measurement, tables in name
         order — the full SeriesSet stream of one wire read_filter call."""
         for t, df in self.read_filter_all(predicate).items():
-            yield from se.frame_series(df, t, self.db.table_schema(t).tag_columns)
+            schema = self.db.table_schema(t)
+            yield from se.frame_series(df, t, schema.tag_columns, schema.time_column)
 
     def read_group(
         self,
@@ -145,7 +149,7 @@ class InfluxRpc:
         group_columns: list[str] | None = None,
         predicate: Predicate | None = None,
     ) -> DataFrame:
-        return se.read_group(self.db, table, agg, group_columns, predicate)
+        return se.read_group_plan(self.db, table, agg, group_columns, predicate)
 
     def read_window_aggregate(
         self,
@@ -155,7 +159,7 @@ class InfluxRpc:
         offset_ns: int = 0,
         predicate: Predicate | None = None,
     ) -> DataFrame:
-        return se.read_window_aggregate(
+        return se.read_window_aggregate_plan(
             self.db, table, agg, every_ns, offset_ns, predicate
         )
 
@@ -169,18 +173,18 @@ class InfluxRpc:
     ) -> DataFrame:
         """Calendar-month WindowEvery (Duration::Variable, incl. negative
         offsets)."""
-        return se.read_window_aggregate_months(
+        return se.read_window_aggregate_months_plan(
             self.db, table, agg, every_months, offset_months, predicate
         )
 
     # -- series framing (exec/seriesset.rs) -------------------------------
     def read_filter_frames(self, table: str, predicate: Predicate | None = None):
-        """Driver-side streaming frames (one series in memory at a time) —
-        for a local consumer.  Cluster-scale consumers should use
+        """Driver-side frames from one Arrow collect — for a local
+        consumer.  Cluster-scale consumers should use
         ``read_filter_frames_distributed``."""
-        df = self.read_filter(table, predicate)
-        tags = self.db.table_schema(table).tag_columns
-        return se.frame_series(df, table, tags)
+        df = se.read_filter_projection(self.db, table, predicate)
+        schema = self.db.table_schema(table)
+        return se.frame_series(df, table, schema.tag_columns, schema.time_column)
 
     def read_filter_frames_distributed(
         self, table: str, predicate: Predicate | None = None

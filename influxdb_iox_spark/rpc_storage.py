@@ -42,6 +42,8 @@ except ImportError:  # pragma: no cover - flight ships with our pyarrow
     _flight = None
     _FLIGHT_AVAILABLE = False
 
+import pyarrow as pa
+
 from influxdb_iox_spark import storage_proto as sp
 from influxdb_iox_spark.database import Database
 from influxdb_iox_spark.operators.series import Aggregate, frame_series
@@ -123,7 +125,7 @@ class StorageService:
         """One encoded ReadResponse per series (data.rs framing)."""
         schema = rpc.db.table_schema(table)
         field_dtypes = self._field_dtypes(rpc, table, df)
-        for sf in frame_series(df, table, ordered_tags):
+        for sf in frame_series(df, table, ordered_tags, schema.time_column):
             frames = sp.series_to_frames(
                 table, sf.tags, sf.rows, field_dtypes, schema.time_column
             )
@@ -177,7 +179,7 @@ class StorageService:
             ordered = [*keys, *[c for c in schema.tag_columns if c not in keys]]
             field_dtypes = self._field_dtypes(rpc, t, df)
             last_group = object()
-            for sf in frame_series(df, t, ordered):
+            for sf in frame_series(df, t, ordered, schema.time_column):
                 gvals = tuple(sf.tags.get(k) for k in keys)
                 if gvals != last_group:
                     last_group = gvals
@@ -204,23 +206,22 @@ class StorageService:
         agg(time)-as-MAX column the reference's plan emits
         (influxrpc.rs:1340-1359, make_agg_expr :1409-1423)."""
         frames = []
-        row = sf.rows[0] if sf.rows else None
-        if row is None:
-            return frames
+        first = sf.rows.slice(0, 1)
+        row = first.to_pylist()[0]
         for fld, dtype in field_dtypes.items():
-            v = row[fld] if fld in row.__fields__ else None
-            if v is None:
+            if row.get(fld) is None:
                 continue
-            t_name = f"{fld}_time"
-            ts = row[t_name] if t_name in row.__fields__ else None
-            if ts is None and time_column in row.__fields__:
-                ts = row[time_column]  # shared max(time) of plain aggs
-            fake = [{time_column: ts if ts is not None else 0, fld: v}]
+            ts = row.get(f"{fld}_time")
+            if ts is None:
+                ts = row.get(time_column)  # shared max(time) of plain aggs
+            point = pa.table(
+                {
+                    time_column: pa.array([ts if ts is not None else 0], pa.int64()),
+                    fld: first.column(fld),
+                }
+            )
             frames.extend(
-                sp.series_to_frames(
-                    table, sf.tags, [_DictRow(r) for r in fake],
-                    {fld: dtype}, time_column,
-                )
+                sp.series_to_frames(table, sf.tags, point, {fld: dtype}, time_column)
             )
         return frames
 
@@ -405,17 +406,6 @@ class StorageService:
         if rpc_name not in self.RPC_NAMES:
             raise StorageRpcError(f"unknown storage RPC {rpc_name!r}")
         return getattr(self, rpc_name)(body)
-
-
-class _DictRow:
-    """Duck-typed Row for synthesized single-point series frames."""
-
-    def __init__(self, d: dict):
-        self._d = d
-        self.__fields__ = list(d)
-
-    def __getitem__(self, k):
-        return self._d[k]
 
 
 if _FLIGHT_AVAILABLE:

@@ -787,7 +787,9 @@ class TableStore:
         # scan's field-stat chunk pruning (the pruning.rs behavior), and the
         # footers already carry them — no extra cost.
         row_count, stats, col_bytes = self._stats_from_footers(path, out_cols)
-        tag_catalog = self._collect_tag_catalog(df.sparkSession, path, schema)
+        tag_catalog = self._collect_tag_catalog(
+            df.sparkSession, path, schema, out_cols
+        )
         est_bytes = _dir_parquet_bytes(path)
         meta = ChunkMeta(
             chunk_id=chunk_id,
@@ -1169,20 +1171,23 @@ class TableStore:
     TAG_CATALOG_CAP = 1000
 
     def _collect_tag_catalog(
-        self, spark: SparkSession, path: str, schema: IoxSchema
+        self, spark: SparkSession, path: str, schema: IoxSchema,
+        columns: list[str],
     ) -> dict[str, list | None]:
-        """Distinct tag values per tag for the just-written chunk.
+        """Distinct tag values per tag for the just-written chunk, whose
+        columns are ``columns``: a tag the chunk lacks gets no entry.
 
         One column-pruned Spark job over the sorted chunk (tags are
-        dictionary-encoded in parquet, so this reads dictionaries, not data).
+        dictionary-encoded in parquet, so this reads dictionaries, not data);
+        the chunk is opened with the registered schema, so no job infers it.
         High-cardinality tags overflow the cap and are recorded as None →
         metadata path falls back to a scan, exactly like the reference
         returning 'unknown' from metadata-only evaluation.
         """
-        chunk_df = spark.read.parquet(path)
-        tags = [t for t in schema.tag_columns if t in chunk_df.columns]
+        tags = [t for t in schema.tag_columns if t in columns]
         if not tags:
             return {}
+        chunk_df = spark.read.schema(schema.struct).parquet(path)
         row = chunk_df.agg(*[F.collect_set(t).alias(t) for t in tags]).first()
         out: dict[str, list | None] = {}
         for t in tags:
@@ -1267,8 +1272,15 @@ class TableStore:
         return total, stats, col_bytes
 
     # -- read / scan ------------------------------------------------------
-    def read_chunk(self, spark: SparkSession, meta: ChunkMeta) -> DataFrame:
-        return spark.read.parquet(os.path.join(self.base_dir, meta.path))
+    def read_chunk(
+        self, spark: SparkSession, meta: ChunkMeta, schema: IoxSchema
+    ) -> DataFrame:
+        """One chunk under the registered table schema.  Opening it runs no
+        Spark job (no footer inference); a column the chunk lacks reads as
+        null, like the scan's clean-chunk relation."""
+        return spark.read.schema(schema.struct).parquet(
+            os.path.join(self.base_dir, meta.path)
+        )
 
     def prune_chunks(
         self, table: str, predicate: Predicate | None, time_column: str = "time"
@@ -1358,7 +1370,7 @@ class TableStore:
             else:
                 ordered = [
                     self.apply_tombstones(
-                        self.read_chunk(spark, m), m.chunk_id, tomb,
+                        self.read_chunk(spark, m, schema), m.chunk_id, tomb,
                         schema.time_column,
                     ).withColumn(DEDUP_ORDER_COLUMN, F.lit(m.chunk_id))
                     for m in sorted(members, key=lambda m: m.chunk_id)

@@ -16,6 +16,8 @@ here → the dict tree plans/rpc_expr.py already translates) and data.rs
 
 from __future__ import annotations
 
+import pyarrow as pa
+
 from influxdb_iox_spark.protowire import Field, decode_message, encode_message
 
 # -- predicate.proto --------------------------------------------------------
@@ -328,23 +330,28 @@ def spark_field_type(dtype: str) -> int:
 def series_to_frames(
     table: str,
     tags: dict[str, str],
-    rows: list,
+    rows: pa.Table,
     field_dtypes: dict[str, str],
     time_column: str = "time",
 ) -> list[dict]:
-    """One series → [SeriesFrame, PointsFrame] per non-all-null field
-    (data.rs:58-77 series_set_to_frames + :145-220 field_to_data).
+    """One series (``rows``: its Arrow rows in time order) → [SeriesFrame,
+    PointsFrame] per non-all-null field (data.rs:58-77 series_set_to_frames
+    + :145-220 field_to_data).
 
     Tags gain the _field/_measurement pseudo-tags first, exactly like
     convert_tags (data.rs:226-251); an all-null field contributes no
-    frames (data.rs:160-165)."""
+    frames (data.rs:160-165).  Timestamps and float values stay NumPy
+    arrays, which ``encode_message`` packs without a per-point loop."""
     frames: list[dict] = []
+    times = rows.column(time_column)
     for fld, dtype in field_dtypes.items():
-        pts = [
-            (row[time_column], row[fld]) for row in rows if row[fld] is not None
-        ]
-        if not pts:
+        values = rows.column(fld)
+        if values.null_count == len(values):
             continue  # all-null field: contributes no series (data.rs:160)
+        timestamps = times
+        if values.null_count:
+            valid = values.is_valid()
+            values, timestamps = values.filter(valid), times.filter(valid)
         dt, points_key = _SPARK_DT[dtype]
         wire_tags = [
             {"key": b"_field", "value": fld.encode()},
@@ -355,16 +362,16 @@ def series_to_frames(
             if v is not None
         ]
         frames.append({"series": {"tags": wire_tags, "data_type": dt}})
-        timestamps = [int(t) for t, _ in pts]
-        if points_key == "boolean_points":
-            values = [bool(v) for _, v in pts]
-        elif points_key == "integer_points":
-            values = [int(v) for _, v in pts]
-        elif points_key == "float_points":
-            values = [float(v) for _, v in pts]
-        else:
-            values = [str(v) for _, v in pts]
-        frames.append({points_key: {"timestamps": timestamps, "values": values}})
+        frames.append(
+            {
+                points_key: {
+                    "timestamps": timestamps.to_numpy(),
+                    "values": values.to_numpy()
+                    if points_key == "float_points"
+                    else values.to_pylist(),
+                }
+            }
+        )
     return frames
 
 

@@ -620,3 +620,34 @@ def test_delete_then_query(either_server):
     with _post(f"{either_server}/api/v2/delete?org=myorg&bucket=mybucket", body) as r:
         assert r.status == 204
     assert _sql(either_server, "SELECT region FROM cpu") == [{"region": "east"}]
+
+
+def test_request_counts_exact_under_concurrent_handlers(server):
+    """Handler threads count replies under the metrics lock: with more
+    clients than cores and a tiny switch interval, http_requests_total
+    still equals the number of requests sent."""
+    import sys
+    import threading
+
+    clients, per_client = 12, 20
+
+    def hit():
+        for _ in range(per_client):
+            with urllib.request.urlopen(f"{server}/health", timeout=30) as r:
+                r.read()
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=hit) for _ in range(clients)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(old)
+    with urllib.request.urlopen(f"{server}/metrics", timeout=30) as r:
+        text = r.read().decode()
+    want = clients * per_client
+    assert f'http_requests_total{{path="/health",status="200"}} {want}' in text

@@ -121,5 +121,39 @@ def test_backfill_many_keys_is_one_write_job(spark, tmp_path):
     assert total == 30
     one = [m for m in metas if m.partition_key == "1970-01-05"]
     assert len(one) == 1
-    rows = store.read_chunk(spark, one[0]).collect()
+    rows = store.read_chunk(spark, one[0], CPU).collect()
     assert len(rows) == 1 and rows[0].user == 4.0
+
+
+def test_tag_catalog_opens_chunk_with_registered_schema(spark, tmp_path):
+    """The tag catalog opens the written chunk under the registered schema,
+    so it runs its aggregation and no schema-inference job; a tag missing
+    from the written columns gets no entry (not an empty list)."""
+    import uuid
+
+    schema = IoxSchema.build(
+        ["region", "host"], {"user": InfluxColumnType.FIELD_FLOAT}
+    )
+    store = TableStore(str(tmp_path / "store"))
+    df = spark.createDataFrame(
+        [("west", "a", 1.0, 10), ("east", "b", 2.0, 20)],
+        "region string, host string, user double, time long",
+    )
+    meta = store.write_chunk(df, "cpu", schema)
+    assert meta.tag_values == {"region": ["east", "west"], "host": ["a", "b"]}
+
+    sc = spark.sparkContext
+    group = f"catalog-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        catalog = store._collect_tag_catalog(
+            spark, os.path.join(store.base_dir, meta.path), schema,
+            ["region", "user", "time"],
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert catalog == {"region": ["east", "west"]}
+    # the aggregation's shuffle stage and result; inferring the schema
+    # would be one job more
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2

@@ -171,7 +171,7 @@ def test_rpc_distributed_frames_match_driver_frames(spark, tmp_path):
     store, db = build(spark, tmp_path)
     rpc = InfluxRpc(db)
     driver = {
-        tuple(sorted(f.tags.items())): [tuple(r) for r in f.rows]
+        tuple(sorted(f.tags.items())): list(zip(*f.rows.to_pydict().values()))
         for f in rpc.read_filter_frames("cpu")
     }
     dist = {}

@@ -282,7 +282,7 @@ def test_frame_series_distributed_matches_driver_framing(db, spark):
 
     df = read_filter(db, "h2o")
     want = {
-        tuple(sorted(f.tags.items())): [tuple(r) for r in f.rows]
+        tuple(sorted(f.tags.items())): list(zip(*f.rows.to_pydict().values()))
         for f in frame_series(df, "h2o", ["city", "state"])
     }
     out = frame_series_distributed(df, "h2o", ["city", "state"])
@@ -724,7 +724,7 @@ def test_read_filter_pred_using_regex_match(spark, tmp_path):
     assert len(frames) == 1
     tags, rows = frames[0].tags, frames[0].rows
     assert tags == {"city": "LA", "state": "CA"}
-    assert [(r["temp"], r["time"]) for r in rows] == [(90.0, 200)]
+    assert [(r["temp"], r["time"]) for r in rows.to_pylist()] == [(90.0, 200)]
     # o2 has no C* state rows in range -> no frames
     assert list(rpc.read_filter_frames("o2", pred)) == []
 
@@ -747,11 +747,11 @@ def test_read_filter_pred_using_regex_not_match(spark, tmp_path):
     h2o = list(rpc.read_filter_frames("h2o", pred))
     assert len(h2o) == 1
     assert h2o[0].tags == {"city": "Boston", "state": "MA"}
-    assert [(r["temp"], r["time"]) for r in h2o[0].rows] == [(72.4, 250)]
+    assert [(r["temp"], r["time"]) for r in h2o[0].rows.to_pylist()] == [(72.4, 250)]
     o2 = list(rpc.read_filter_frames("o2", pred))
     assert len(o2) == 1
     assert o2[0].tags == {"city": "Boston", "state": "MA"}
-    assert [(r["reading"], r["temp"], r["time"]) for r in o2[0].rows] == [
+    assert [(r["reading"], r["temp"], r["time"]) for r in o2[0].rows.to_pylist()] == [
         (51.0, 53.4, 250)
     ]
 

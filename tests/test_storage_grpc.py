@@ -631,3 +631,101 @@ def test_window_aggregate_legacy_fields_win_over_window(client):
         sp.READ_RESPONSE,
     )
     assert a == b
+
+
+def test_codec_numpy_packed_matches_list():
+    """A NumPy array in a repeated double / sfixed64 / fixed64 field packs
+    from its buffer to the same bytes as the equal list; varint kinds take
+    NumPy values through the per-value loop."""
+    import numpy as np
+
+    from influxdb_iox_spark.protowire import Field
+
+    ts = [1, -5, 2**40, -(2**63), 2**63 - 1]
+    floats = [1.5, -2.5, 0.0, float("inf"), 1e-300]
+    ints = [0, -7, 2**40]
+    unsigned = {1: Field("u", "fixed64", repeated=True)}
+    cases = [
+        (sp.FLOAT_POINTS, {"timestamps": ts, "values": floats},
+         {"timestamps": np.array(ts, dtype=np.int64),
+          "values": np.array(floats, dtype=np.float64)}),
+        # non-native dtypes widen exactly as the per-value path converts
+        (sp.FLOAT_POINTS, {"timestamps": [3, 4], "values": [0.5, -1.25]},
+         {"timestamps": np.array([3, 4], dtype=">i4"),
+          "values": np.array([0.5, -1.25], dtype=np.float32)}),
+        (sp.INTEGER_POINTS, {"timestamps": ts[:3], "values": ints},
+         {"timestamps": np.array(ts[:3]), "values": np.array(ints)}),
+        (unsigned, {"u": [0, 1, 2**64 - 1]},
+         {"u": np.array([0, 1, 2**64 - 1], dtype=np.uint64)}),
+    ]
+    for schema, as_list, as_array in cases:
+        data = encode_message(as_list, schema)
+        assert encode_message(as_array, schema) == data
+        assert decode_message(data, schema) == as_list
+    empty = {"timestamps": np.array([], dtype=np.int64), "values": np.array([])}
+    assert encode_message(empty, sp.FLOAT_POINTS) == b""
+
+
+def _jobs_run(spark, fn):
+    """(fn(), number of Spark jobs fn ran), from the status store."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_filter_job_and_exchange_counts(spark, tmp_path):
+    """Counters noise cannot move, over a store with one overlapping chunk:
+    planning the scan opens the overlapping chunks without a Spark job, the
+    served ReadFilter plan has no range-partition (global sort) exchange,
+    and a whole ReadFilter request runs at most 2 jobs (the dedup shuffle
+    and the Arrow collect)."""
+    from influxdb_iox_spark.operators.series import read_filter
+    from influxdb_iox_spark.rpc import InfluxRpc
+    from influxdb_iox_spark.rpc_storage import StorageService
+
+    schema = IoxSchema.build(["host"], {"usage": InfluxColumnType.FIELD_FLOAT})
+    store = TableStore(str(tmp_path / "store"))
+    cols = "host string, usage double, time long"
+    store.write_chunk(
+        spark.createDataFrame([("a", 1.0, NS), ("b", 2.0, NS + 1)], cols), "cpu", schema
+    )
+    store.write_chunk(  # overlaps the first chunk
+        spark.createDataFrame([("a", 3.0, NS), ("c", 4.0, NS + 2)], cols), "cpu", schema
+    )
+    store.write_chunk(  # clean: later than both
+        spark.createDataFrame([("a", 5.0, NS + 100)], cols), "cpu", schema
+    )
+    db = Database(DB_NAME, store, spark)
+    db.register_table("cpu", schema)
+
+    scanned, jobs = _jobs_run(spark, lambda: store.scan(spark, "cpu", schema))
+    assert jobs == 0
+    rows = scanned.select("host", "usage", "time").collect()
+    assert sorted(tuple(r) for r in rows) == [
+        ("a", 3.0, NS), ("a", 5.0, NS + 100), ("b", 2.0, NS + 1), ("c", 4.0, NS + 2),
+    ]
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString().lower()
+
+    served = InfluxRpc(db).read_filter_all()["cpu"]
+    assert "rangepartitioning" not in plan(served)
+    assert "rangepartitioning" in plan(read_filter(db, "cpu"))  # the sorted twin
+
+    req = encode_message(
+        {"read_source": _read_source(), "range": {"start": NS, "end": NS + 200}},
+        sp.READ_FILTER_REQUEST,
+    )
+    service = StorageService({DB_NAME: db})
+    out, jobs = _jobs_run(spark, lambda: list(service.call("ReadFilter", req)))
+    assert jobs <= 2
+    frames = [decode_message(m, sp.READ_RESPONSE)["frames"] for m in out]
+    assert [f[1]["float_points"]["values"] for f in frames] == [[3.0, 5.0], [2.0], [4.0]]
