@@ -36,7 +36,6 @@ def seasonal_decompose(
     time_col: str = "time",
     value_col: str = "value",
     phase_from_time: bool = False,
-    materialize: str | None = "local_checkpoint",
 ) -> DataFrame:
     """(keys, time, value, trend, seasonal, resid) — additive classical
     decomposition with seasonality ``period`` (rows per cycle; the
@@ -95,31 +94,17 @@ def seasonal_decompose(
         trend.alias("trend"),
         phase.alias("__phase"),
     ).withColumn("__detr", F.col(value_col) - F.col("trend"))
-    # Materialize the windowed trend frame ONCE (round-16 optimization):
-    # both the phase-mean aggregate and the final join read `base`, and
-    # without this the whole upstream (any caller bucketing aggregate +
-    # the trend window pass) executes twice — the before-plan carried
-    # two full scan→aggregate→window pipelines.  Rows are one per
-    # series point; checkpoint blocks are keyed to this RDD object
-    # (repeated invocations recompute — no cross-run result reuse).
-    # eager=False (round-17, VERDICT r16 item 2): the broadcast build of
-    # `means` is the FIRST computation of this RDD inside the query's own
-    # action, so lazy checkpointing persists the blocks as a side effect
-    # of work the query already does and the outer join reads them —
-    # same single-build plan, minus the extra synchronous job an eager
-    # checkpoint pays before the timed action even starts (the sf0.1
-    # fixed-overhead regression the round-16 verdict flagged).
-    # ``materialize`` is the scale-policy knob (the dedup.py convention):
-    # "local_checkpoint" stores executor-local blocks with NO lineage
-    # fallback — right for the bucketed frames this operator sees;
-    # ``None`` keeps pure lineage (the pre-round-16 two-pipeline shape)
-    # for deployments that must survive executor loss mid-query.
-    if materialize == "local_checkpoint":
-        base = base.localCheckpoint(eager=False)
-    elif materialize is not None:
-        raise ValueError(
-            f"materialize must be 'local_checkpoint' or None, got {materialize!r}"
-        )
+    # The windowed trend frame is materialized ONCE, lazily: both the
+    # phase-mean aggregate and the final join read `base`, and without a
+    # checkpoint the whole upstream (any caller bucketing aggregate + the
+    # trend window pass) executes twice.  eager=False because the
+    # broadcast build of `means` is the FIRST computation of this RDD
+    # inside the query's own action: the blocks persist as a side effect
+    # of work the query already does and the outer join reads them, with
+    # no extra synchronous job before the action starts.  Checkpoint
+    # blocks are keyed to this RDD object (repeated invocations
+    # recompute — no cross-run result reuse).
+    base = base.localCheckpoint(eager=False)
     means = (
         base.filter(F.col("__detr").isNotNull())
         .groupBy(*keys, "__phase")

@@ -66,23 +66,15 @@ def lttb_downsample(
     value_col: str,
     n_out: int,
     time_unit: str = "us",
-    materialize: str | None = "local_checkpoint",
-    materialize_dir: str | None = None,
 ) -> DataFrame:
     """(keys..., time, value) — at most ``n_out`` points per series:
     first + last + one largest-triangle point per interior bucket.
     ``time_unit`` is "us" (default) or "ns"; see the module docstring's
     time-unit contract.
 
-    ``materialize`` picks how the windowed base (ONE row per input
-    point — corpus-scale) is stored for its five consumers:
-    ``"local_checkpoint"`` (default) uses executor-local blocks with no
-    lineage fallback — an executor loss kills the job instead of
-    recomputing, acceptable for local mode and short jobs;
-    ``"parquet"`` routes through ``materialize_parquet`` into
-    ``materialize_dir`` (cluster-shared storage), the setting a 100 TB
-    run should use; ``None`` keeps pure lineage and re-derives the
-    upstream per consumer (the pre-round-16 five-scan shape)."""
+    The windowed base (one row per input point) is computed once, by an
+    eager ``localCheckpoint``, and its five consumers read those blocks;
+    ``value_col`` must be non-null (a null raises in-plan)."""
     if n_out < 3:
         raise ValueError("n_out must be >= 3")
     if time_unit not in ("us", "ns"):
@@ -90,12 +82,18 @@ def lttb_downsample(
     n_buckets = n_out - 2
     wa = Window.partitionBy(*keys)
     v_dbl = F.col(value_col).cast("double")
-    # in-plan guard: a value past the µ-unit long range must raise, not
-    # saturate the cast (raise_error rides inside the expression tree so
-    # column pruning can never drop it)
+    # in-plan guard: a null, or a value past the µ-unit long range, must
+    # raise, not saturate the cast (raise_error rides inside the
+    # expression tree so column pruning can never drop it)
     vm = F.when(
         F.abs(v_dbl) <= F.lit(_V_MAX),
         F.round(v_dbl * 1_000_000).cast("long"),
+    ).when(
+        v_dbl.isNull(),
+        F.raise_error(
+            F.lit(f"lttb_downsample: {value_col} is null — every point "
+                  "needs a value")
+        ).cast("long"),
     ).otherwise(
         F.raise_error(
             F.lit(
@@ -116,33 +114,18 @@ def lttb_downsample(
         F.count("*").over(wa).alias("__n"),
         F.min(F.col(time_col)).over(wa).alias("__t0"),
     )
-    # Materialize the windowed base ONCE (round-16 optimization): five
-    # downstream consumers reference it (passthrough, first/last, the
-    # interior bucket rows on BOTH sides of the anchor join, and the
-    # endpoint anchors), and their subtrees differ just enough — pushed
-    # filters, extra projections — that ReuseExchange can never fire, so
-    # without this the ENTIRE upstream (scan + any caller aggregation +
-    # this window pass) re-executes five times (plan-verified:
-    # plans/r16/events_lttb_downsample_before.txt shows 5 parquet scans
-    # and 10 aggregate exchanges for one query).  localCheckpoint, not
-    # cache(): checkpointed blocks are keyed to THIS RDD object, so a
-    # repeated invocation recomputes from the inputs — no cross-run
-    # result reuse.  The base is ONE row per input point, so the
-    # storage strategy is the ``materialize`` knob (round-17, VERDICT
-    # r16 item 4 — see the docstring): executor-local blocks by
-    # default, cluster-shared parquet for deployments that need a
-    # lineage-free executor-loss story, or pure lineage.
-    if materialize == "parquet":
-        from influxdb_iox_spark.pipeline.dedup import materialize_parquet
-
-        base = materialize_parquet(base, materialize_dir)
-    elif materialize == "local_checkpoint":
-        base = base.localCheckpoint(eager=True)
-    elif materialize is not None:
-        raise ValueError(
-            "materialize must be 'local_checkpoint', 'parquet' or None, "
-            f"got {materialize!r}"
-        )
+    # The windowed base is materialized ONCE, eagerly: five downstream
+    # consumers reference it (passthrough, first/last, the interior
+    # bucket rows on BOTH sides of the anchor join, and the endpoint
+    # anchors), and their subtrees differ just enough — pushed filters,
+    # extra projections — that ReuseExchange can never fire, so without
+    # it the ENTIRE upstream (scan + any caller aggregation + this
+    # window pass) re-executes five times, and the row_number ties of
+    # duplicate timestamps could split differently per consumer.
+    # localCheckpoint, not cache(): checkpointed blocks are keyed to THIS
+    # RDD object, so a repeated invocation recomputes from the inputs —
+    # no cross-run result reuse.
+    base = base.localCheckpoint(eager=True)
     # short series pass through whole
     passthrough = base.filter(F.col("__n") <= n_out)
     long_series = base.filter(F.col("__n") > n_out)

@@ -111,8 +111,6 @@ def minhash_signatures(
     id_col: str = "doc_id",
     shingle_n: int = 3,
     num_perm: int = 64,
-    materialize: str | None = "local_checkpoint",
-    materialize_dir: str | None = None,
 ) -> DataFrame:
     """(id, shingles, signature): MinHash via explode + affine permutations.
 
@@ -199,32 +197,17 @@ def minhash_signatures(
         ),
         F.when(F.col("s").isNotNull(), F.xxhash64(F.col("s"))).alias("__h64"),
     )
-    # Materialize the hashed shingle rows ONCE (round-16 optimization):
-    # the split aggregate below reads `pre` twice (codegen mins +
-    # object-hash collect_set), and the planner does not reuse the
-    # shared subtree (verified: the executed plan carries two full
+    # The hashed shingle rows are materialized ONCE, eagerly: the split
+    # aggregate below reads `pre` twice (codegen mins + object-hash
+    # collect_set), and the planner does not reuse the shared subtree
+    # (verified: the executed plan carries two full
     # scan→tokenize→shingle→hash pipelines, no ReusedExchange), so
-    # without this every shingle is cut and hashed twice.  The rows are
-    # (id, 2 longs) per shingle — the same bytes the repartition
-    # exchange already moves, but ≥1 row per shingle, i.e. LARGER than
-    # the corpus — so the strategy is a knob (round-17, VERDICT r16
-    # item 3/SCALE.md): ``"local_checkpoint"`` (default) stores
-    # executor-local blocks with NO lineage fallback (an executor loss
-    # kills the job instead of recomputing — fine in local mode and for
-    # short jobs); ``"parquet"`` routes through ``materialize_parquet``
-    # into cluster-shared storage (``materialize_dir``), the setting a
-    # 100 TB run should use; ``None`` keeps pure lineage and accepts
-    # the double shingle pass.  Blocks/files are keyed to this call, so
-    # repeated invocations recompute (no cross-run result reuse).
-    if materialize == "parquet":
-        pre = materialize_parquet(pre, materialize_dir)
-    elif materialize == "local_checkpoint":
-        pre = pre.localCheckpoint(eager=True)
-    elif materialize is not None:
-        raise ValueError(
-            "materialize must be 'local_checkpoint', 'parquet' or None, "
-            f"got {materialize!r}"
-        )
+    # without a checkpoint every shingle is cut and hashed twice.  The
+    # rows are (id, 2 longs) per shingle — the same bytes the
+    # repartition exchange already moves.  Blocks are keyed to this
+    # call, so repeated invocations recompute (no cross-run result
+    # reuse).
+    pre = pre.localCheckpoint(eager=True)
     mins = [
         F.coalesce(
             F.min(
@@ -469,7 +452,6 @@ def near_duplicate_pairs_minhash(
     max_bucket_size: int = 20_000,
     materialize: str = "local_checkpoint",
     materialize_dir: str | None = None,
-    pre_materialize: str | None = "local_checkpoint",
 ) -> DataFrame:
     """End-to-end MinHash near-dup: shingle → sign → band → verify.
 
@@ -487,19 +469,17 @@ def near_duplicate_pairs_minhash(
       (BENCH_NOTES r6), materially lower run-to-run variance than the
       checkpoint's block-manager writes.  Pass ``materialize_dir`` on a
       real cluster (shared FS / object store).
+
+    Any other ``materialize`` value raises ``ValueError``.  The
+    per-shingle frame inside ``minhash_signatures`` is an eager
+    ``localCheckpoint`` under either strategy.
     """
-    sigs = minhash_signatures(
-        df, text_col, id_col, shingle_n, num_perm,
-        # the per-shingle pre-frame keeps its executor-local checkpoint
-        # default even when the SIGNATURE frame goes to parquet: the
-        # honest timed-build A/B (scripts/ab_minhash_pre_r17.py, build
-        # inside the window) reads checkpoint-pre 2.955 vs parquet-pre
-        # 3.489 s min at sf0.1 with flat medians — the extra parquet
-        # round-trip costs more than block-manager jitter here.  A
-        # cluster that needs lineage-free storage for the corpus-scale
-        # pre frame passes pre_materialize="parquet" (SCALE.md §r17).
-        materialize=pre_materialize, materialize_dir=materialize_dir,
-    )
+    if materialize not in ("local_checkpoint", "parquet"):
+        raise ValueError(
+            "materialize must be 'local_checkpoint' or 'parquet', "
+            f"got {materialize!r}"
+        )
+    sigs = minhash_signatures(df, text_col, id_col, shingle_n, num_perm)
     if materialize == "parquet":
         sigs = materialize_parquet(sigs, materialize_dir)
     else:

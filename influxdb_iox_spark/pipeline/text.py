@@ -485,7 +485,6 @@ def winnow_similar_pairs(
     w: int = 4,
     min_shared: int = 2,
     max_df: int | None = 50,
-    materialize: str | None = "local_checkpoint",
 ) -> DataFrame:
     """Document pairs sharing >= ``min_shared`` winnowing fingerprints —
     the MOSS-style local-overlap detector (catches plagiarised/quoted
@@ -505,27 +504,13 @@ def winnow_similar_pairs(
     right sides of the pair join — and the df-cut join puts the first
     two UNDER each pair side, so an unmaterialized plan replays the
     tokenize+gram+md5+window pipeline four times; the round-16 audit
-    plan showed 4 document scans).  ``materialize`` picks the
-    once-not-four-times strategy — the same lever the MinHash pipeline
-    exposes for its signatures:
-
-    - ``"local_checkpoint"`` (default): eager executor-local blocks of
-      the compact distinct (id, fingerprint) frame; works anywhere with
-      no storage config.
-    - any other string: a shared-storage dir for a parquet write+reread
-      (``"tmp"`` = process-local temp dir, LOCAL MODE ONLY) via
-      dedup.materialize_parquet — exact file stats for AQE.
-    - ``None``: no materialization (fully lazy plan).
+    plan showed 4 document scans).  The compact distinct (id,
+    fingerprint) frame is therefore materialized once, by an eager
+    ``localCheckpoint``, and every branch reads those blocks.
     """
-    fps = winnow_fingerprints(df, text_col, id_col, k=k, w=w)
-    if materialize == "local_checkpoint":
-        fps = fps.localCheckpoint(eager=True)
-    elif materialize is not None:
-        from influxdb_iox_spark.pipeline.dedup import materialize_parquet
-
-        fps = materialize_parquet(
-            fps, None if materialize == "tmp" else materialize
-        )
+    fps = winnow_fingerprints(df, text_col, id_col, k=k, w=w).localCheckpoint(
+        eager=True
+    )
     if max_df is not None:
         keep = (
             fps.groupBy("fingerprint")

@@ -158,3 +158,26 @@ def test_randomized_series_match_reference(spark):
             values.append(round(x + rng.uniform(-0.5, 0.5), 3))
         got = _run(spark, values, m)
         _check(got["a"], values, m)
+
+
+def test_trend_frame_computed_once(spark):
+    """The trend frame feeds the phase means and the final join; it is
+    checkpointed, so the upstream (here a Python UDF counting its calls)
+    runs once per row."""
+    from pyspark.sql import functions as F
+
+    acc = spark.sparkContext.accumulator(0)
+
+    def bump(v):
+        acc.add(1)
+        return v
+
+    rows = [
+        (k, t, math.sin(t / 3.0) * 10 + (t % 5)) for k in "ab" for t in range(48)
+    ]
+    df = spark.createDataFrame(rows, "k string, time long, value double").select(
+        "k", "time", F.udf(bump, "double")("value").alias("value")
+    )
+    out = seasonal_decompose(df, 12, key_cols=["k"]).collect()
+    assert len(out) == len(rows)
+    assert acc.value == len(rows), f"upstream ran {acc.value} times for {len(rows)} rows"

@@ -105,7 +105,12 @@ def test_value_out_of_scaling_range_raises(spark):
     # AQE may wrap the raise in STAGE_MATERIALIZATION_MULTIPLE_FAILURES,
     # so match the operator's message, not a specific exception class
     df = _series(spark, [0.0, 1e13, 2.0, 3.0, 4.0])
-    with pytest.raises(Exception, match="lttb_downsample"):
+    with pytest.raises(Exception, match="lttb_downsample: .v. exceeds"):
+        lttb_downsample(df, ["k"], "t", "v", n_out=3).collect()
+    # a null value names the real cause, not the scaling-range bound
+    rows = [("a", i * 10, None if i == 2 else float(i)) for i in range(5)]
+    df = spark.createDataFrame(rows, "k string, t long, v double")
+    with pytest.raises(Exception, match="lttb_downsample: v is null"):
         lttb_downsample(df, ["k"], "t", "v", n_out=3).collect()
 
 
@@ -191,28 +196,19 @@ def test_ns_rebase_is_exact_integer_div(spark):
     assert "floor" not in plan.lower()  # no double-floor rebase anywhere
 
 
-def test_lttb_materialize_modes_identical(spark):
-    """Round-17 scale knob (VERDICT r16 item 4): the windowed base's
-    storage strategy — local_checkpoint (default), parquet
-    (cluster-shared), None (pure lineage, five-consumer re-derive) —
-    never changes the selected points."""
-    import math
+def test_windowed_base_computed_once(spark):
+    """The windowed base feeds five consumers; it is checkpointed, so the
+    upstream (here a Python UDF counting its calls) runs once per row."""
+    acc = spark.sparkContext.accumulator(0)
 
-    rows = [
-        ("s", i * 1_000_000, math.sin(i / 3.0) * 10 + (i % 7))
-        for i in range(40)
-    ]
-    df = spark.createDataFrame(rows, "k string, t long, v double")
+    def bump(v):
+        acc.add(1)
+        return v
 
-    def norm(out):
-        return sorted((r.k, r.t, r.v) for r in out.collect())
-
-    base = norm(lttb_downsample(df, ["k"], "t", "v", n_out=8))
-    assert norm(
-        lttb_downsample(df, ["k"], "t", "v", n_out=8, materialize="parquet")
-    ) == base
-    assert norm(
-        lttb_downsample(df, ["k"], "t", "v", n_out=8, materialize=None)
-    ) == base
-    with pytest.raises(ValueError, match="materialize"):
-        lttb_downsample(df, ["k"], "t", "v", n_out=8, materialize="bogus")
+    rows = [(k, i * 10, float((i * 7) % 11)) for k in "ab" for i in range(40)]
+    df = spark.createDataFrame(rows, "k string, t long, v double").select(
+        "k", "t", F.udf(bump, "double")("v").alias("v")
+    )
+    out = lttb_downsample(df, ["k"], "t", "v", n_out=8).collect()
+    assert len(out) == 16
+    assert acc.value == len(rows), f"upstream ran {acc.value} times for {len(rows)} rows"

@@ -259,27 +259,27 @@ def test_jaccard_verify_union_arithmetic_bit_identical(spark, docs):
     assert (1, 4) in got  # the planted near pair actually exercises the math
 
 
-def test_minhash_signatures_materialize_modes_identical(spark):
-    """Round-17 scale knob (VERDICT r16 item 4): the per-shingle pre
-    frame's storage strategy — local_checkpoint (default), parquet
-    (cluster-shared), None (pure lineage) — never changes results."""
+def test_near_duplicate_pairs_materialize_modes_identical(spark):
+    """The signature frame's two storage strategies — local_checkpoint
+    (default) and parquet (cluster-shared) — give identical pairs; any
+    other value raises instead of silently taking the checkpoint."""
     docs = [
-        (1, "the quick brown fox jumps over the lazy dog"),
-        (2, "the quick brown fox jumped over the lazy dog"),
+        (1, "the quick brown fox jumps over the lazy dog while the cat naps on a mat"),
+        (2, "the quick brown fox jumps over the lazy dog while the cat naps on a rug"),
         (3, "completely different text with no overlap at all"),
         (4, "ab"),
         (5, ""),
     ]
     df = spark.createDataFrame(docs, "doc_id int, text string")
 
-    def norm(sig_df):
-        return {
-            r.doc_id: (sorted(r.shingles), list(r.signature))
-            for r in sig_df.collect()
-        }
+    def pairs(**kw):
+        out = near_duplicate_pairs_minhash(df, threshold=0.5, **kw)
+        return sorted((r.a, r.b, r.jaccard) for r in out.collect())
 
-    base = norm(minhash_signatures(df))
-    assert norm(minhash_signatures(df, materialize="parquet")) == base
-    assert norm(minhash_signatures(df, materialize=None)) == base
-    with pytest.raises(ValueError, match="materialize"):
-        minhash_signatures(df, materialize="bogus")
+    base = pairs()
+    assert [(a, b) for a, b, _ in base] == [(1, 2)]
+    assert pairs(materialize="local_checkpoint") == base
+    assert pairs(materialize="parquet") == base
+    for bad in ("bogus", None):
+        with pytest.raises(ValueError, match="materialize"):
+            near_duplicate_pairs_minhash(df, materialize=bad)
