@@ -145,11 +145,14 @@ class Database:
 
     def register_views(self, force: bool = False) -> None:
         """(Re)register every table's dedup-correct scan + system tables as
-        temp views.  Registration is CACHED on the store's catalog_version:
-        a serving path (HTTP/Flight) issuing many queries only pays the
-        O(tables × chunks) view planning again after a write/compaction
-        actually changed the manifest — or after ANOTHER Database registered
-        its views into the same session (see _VIEW_REGISTRY)."""
+        temp views.  The per-table plan cost is carried by the store's scan
+        plan cache (``TableStore.scan``), which every read frontend shares;
+        this registration check only avoids re-registering the session's
+        temp views and rebuilding the system tables.  It is keyed on the
+        store's catalog_version, so a serving path (HTTP/Flight) issuing
+        many queries re-registers only after a write/compaction actually
+        changed the manifest — or after ANOTHER Database registered its
+        views into the same session (see _VIEW_REGISTRY)."""
         version = (
             self.store.base_dir,
             self.store.catalog_version(),

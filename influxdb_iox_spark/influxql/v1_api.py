@@ -483,6 +483,32 @@ _USER_STATEMENTS = (
 )
 
 
+def _plan_with_metrics(node, depth: int = 0):
+    """Lines of an EXECUTED physical plan, one per operator, each followed
+    by its SQL metrics (``name: value``, the values the run produced).  An
+    adaptive plan prints its final plan; a query stage prints the plan it
+    ran."""
+    metrics = []
+    it = node.metrics().iterator()
+    while it.hasNext():
+        kv = it.next()
+        name = kv._2().name()
+        label = name.get() if name.isDefined() else kv._1()
+        metrics.append(f"{label}: {kv._2().value()}")
+    line = "   " * depth + node.simpleString(25)
+    yield f"{line} [{', '.join(sorted(metrics))}]" if metrics else line
+    kind = node.getClass().getSimpleName()
+    if kind == "AdaptiveSparkPlanExec":
+        children = [node.executedPlan()]
+    elif kind.endswith("QueryStageExec"):
+        children = [node.plan()]
+    else:
+        seq = node.children()
+        children = [seq.apply(i) for i in range(seq.size())]
+    for c in children:
+        yield from _plan_with_metrics(c, depth + 1)
+
+
 def _check_privilege(stmt, registry, identity, selected_db) -> None:
     """Stock per-statement authorization.  No-op unless a NON-EMPTY
     registry is configured (anonymous mode, and the CREATE USER
@@ -859,10 +885,10 @@ def run_statements(
                 )
                 qe = df._jdf.queryExecution()
                 if stmt.analyze:
-                    # EXPLAIN ANALYZE executes first, so AQE finalizes
-                    # the plan and the text reflects what actually ran
-                    df.write.format("noop").mode("overwrite").save()
-                    text = qe.executedPlan().toString()
+                    # EXPLAIN ANALYZE runs df's OWN QueryExecution, so AQE
+                    # finalizes exactly the plan printed, with its metrics
+                    df.collect()
+                    text = "\n".join(_plan_with_metrics(qe.executedPlan()))
                 else:
                     jvm = df.sparkSession._jvm
                     text = (

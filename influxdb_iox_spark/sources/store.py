@@ -27,8 +27,10 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import time as _time
 import uuid
+from collections import OrderedDict
 from dataclasses import asdict, dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -42,6 +44,10 @@ from influxdb_iox_spark.operators.overlap import group_potential_duplicates
 from influxdb_iox_spark.sources.objstore import fold_records
 from influxdb_iox_spark.plans.predicate import Predicate
 from influxdb_iox_spark.schema import IoxSchema, merge_chunk_frames
+
+#: merged scan plans one TableStore keeps (LRU; see TableStore.scan).  Each
+#: entry holds a JVM plan with its file listing, not data.
+SCAN_PLAN_CACHE_SIZE = 64
 
 
 @dataclass
@@ -613,6 +619,9 @@ class TableStore:
         # query_tests/src/pruning.rs) — per-process, like a per-server
         # metric registry.  table -> {metric family -> count}.
         self.prune_metrics: dict[str, dict[str, int]] = {}
+        # scan-plan LRU: key (see scan) -> (merged frame, output columns)
+        self._scan_plans: OrderedDict[tuple, tuple[DataFrame, list[str]]] = OrderedDict()
+        self._scan_plans_lock = threading.Lock()
         os.makedirs(base_dir, exist_ok=True)
 
     def _record_pruned(self, table: str, chunks: "list[ChunkMeta]") -> None:
@@ -1326,7 +1335,28 @@ class TableStore:
         schema: IoxSchema,
         predicate: Predicate | None = None,
     ) -> DataFrame:
-        """Dedup-correct scan of one table (the ChunkTableProvider equivalent)."""
+        """Dedup-correct scan of one table (the ChunkTableProvider equivalent).
+
+        Chunk pruning, tombstone lookup, overlap grouping and field-stat
+        pruning run on every call (manifest metadata on the driver, so a
+        write is visible to the next scan).  The merged, deduped,
+        tombstone-filtered frame they select — everything before
+        ``predicate.apply`` — is planned once per chunk set and reused from
+        a bounded LRU (``SCAN_PLAN_CACHE_SIZE``): an unchanged store is not
+        re-planned per request.  The predicate and the final projection are
+        applied per call on top, so Catalyst still pushes the predicate into
+        the parquet scan.
+
+        The cache key is the session, the table, the registered schema
+        (struct and metadata) and, per surviving group, each member's
+        ``(chunk_id, path, applied tombstone ids)``.  That fully determines
+        the plan: chunk directories are immutable and their paths carry a
+        uuid, and a tombstone id is a uuid whose predicate never changes.
+        So a register, delete, compaction, drop or GC yields a different key
+        by construction and needs no invalidation (``catalog_version()``
+        would add nothing but a whole-manifest stat walk per call, and it
+        changes on writes to OTHER tables too).  Only the plan is cached:
+        no ``cache()``/``persist()``, so a hit still reads the files."""
         chunks = self.prune_chunks(table, predicate, schema.time_column)
         if not chunks:
             return spark.createDataFrame([], schema.struct)
@@ -1336,7 +1366,71 @@ class TableStore:
         # deleted row must not contribute fields to a last-non-null merge
         tomb = self._tombstones_for_chunks(table, chunks)
 
-        groups = group_potential_duplicates(chunks, schema.primary_key)
+        clean: list[ChunkMeta] = []
+        dirty: list[list[ChunkMeta]] = []
+        for g in group_potential_duplicates(chunks, schema.primary_key):
+            members = [chunks[i] for i in g]
+            if len(members) > 1:
+                dirty.append(sorted(members, key=lambda m: m.chunk_id))
+            # Field-stat chunk pruning (query/src/pruning.rs): drop a
+            # chunk whose column stats are provably disjoint with the
+            # predicate's structured bounds.  ONLY safe for clean
+            # (non-overlapping) chunks — a dirty chunk's fields can
+            # survive into last-non-null merged rows whose OTHER fields
+            # make the predicate true, so pruning it would corrupt the
+            # merge.  (Time/partition pruning is exempt: those columns
+            # are part of the dedup key, so a pruned row's merge twins
+            # are outside the range too.)
+            elif predicate is not None and predicate.excludes_stats(
+                members[0].stats
+            ):
+                self._record_pruned(table, members)
+            else:
+                clean.append(members[0])
+        if not clean and not dirty:  # every chunk field-pruned
+            return spark.createDataFrame([], schema.struct)
+
+        def ident(m: ChunkMeta) -> tuple:
+            return (
+                m.chunk_id, m.path, tuple(tid for tid, _ in tomb.get(m.chunk_id, []))
+            )
+
+        key = (
+            spark,
+            table,
+            schema.struct.json(),
+            tuple(ident(m) for m in clean),
+            tuple(tuple(ident(m) for m in g) for g in dirty),
+        )
+        with self._scan_plans_lock:
+            entry = self._scan_plans.get(key)
+            if entry is not None:
+                self._scan_plans.move_to_end(key)
+        if entry is None:
+            # built outside the lock: two threads missing on one key both
+            # build (identical plans), the later insert wins — harmless
+            base = self._plan_scan(spark, schema, clean, dirty, tomb)
+            entry = (base, [f.name for f in schema.struct.fields if f.name in base.columns])
+            with self._scan_plans_lock:
+                self._scan_plans[key] = entry
+                while len(self._scan_plans) > SCAN_PLAN_CACHE_SIZE:
+                    self._scan_plans.popitem(last=False)
+        out, cols = entry
+        if predicate is not None:
+            out = predicate.apply(out, schema.time_column)
+        return out.select(*cols)
+
+    def _plan_scan(
+        self,
+        spark: SparkSession,
+        schema: IoxSchema,
+        clean: "list[ChunkMeta]",
+        dirty: "list[list[ChunkMeta]]",
+        tomb: dict[int, list],
+    ) -> DataFrame:
+        """The merged frame ``scan`` caches: clean chunks as multi-path
+        parquet relations, each overlap group (members in chunk-id order)
+        deduplicated, all unioned by name."""
         # Batch every clean (non-overlapping) chunk into ONE multi-path
         # parquet relation PER TOMBSTONE SET: driver planning cost and the
         # plan's relation count stay O(#distinct tombstone sets) — O(1)
@@ -1345,43 +1439,24 @@ class TableStore:
         # per-chunk DataFrame+union approach spends minutes in the driver
         # before a single task runs.
         clean_paths: dict[tuple, list[str]] = {}
-        parts: list[DataFrame] = []
-        for g in groups:
-            members = [chunks[i] for i in g]
-            if len(members) == 1:
-                # Field-stat chunk pruning (query/src/pruning.rs): drop a
-                # chunk whose column stats are provably disjoint with the
-                # predicate's structured bounds.  ONLY safe for clean
-                # (non-overlapping) chunks — a dirty chunk's fields can
-                # survive into last-non-null merged rows whose OTHER fields
-                # make the predicate true, so pruning it would corrupt the
-                # merge.  (Time/partition pruning is exempt: those columns
-                # are part of the dedup key, so a pruned row's merge twins
-                # are outside the range too.)
-                if predicate is not None and predicate.excludes_stats(
-                    members[0].stats
-                ):
-                    self._record_pruned(table, [members[0]])
-                    continue
-                key = tuple(tid for tid, _ in tomb.get(members[0].chunk_id, []))
-                clean_paths.setdefault(key, []).append(
-                    os.path.join(self.base_dir, members[0].path)
-                )
-            else:
-                ordered = [
+        for m in clean:
+            key = tuple(tid for tid, _ in tomb.get(m.chunk_id, []))
+            clean_paths.setdefault(key, []).append(os.path.join(self.base_dir, m.path))
+        parts: list[DataFrame] = [
+            deduplicate(
+                merge_chunk_frames([
                     self.apply_tombstones(
                         self.read_chunk(spark, m, schema), m.chunk_id, tomb,
                         schema.time_column,
                     ).withColumn(DEDUP_ORDER_COLUMN, F.lit(m.chunk_id))
-                    for m in sorted(members, key=lambda m: m.chunk_id)
-                ]
-                df = deduplicate(
-                    merge_chunk_frames(ordered),
-                    schema.tag_columns,
-                    schema.field_columns,
-                    schema.time_column,
-                )
-                parts.append(df)
+                    for m in members
+                ]),
+                schema.tag_columns,
+                schema.field_columns,
+                schema.time_column,
+            )
+            for members in dirty
+        ]
 
         stone_by_id = {
             tid: dp for lst in tomb.values() for tid, dp in lst
@@ -1391,21 +1466,14 @@ class TableStore:
             # file's footer on the driver (measured ~13 s at 10^4 chunks);
             # the registered table schema is authoritative and the reader
             # null-fills columns a pre-extension chunk lacks.
-            clean = spark.read.schema(schema.struct).parquet(*paths)
+            relation = spark.read.schema(schema.struct).parquet(*paths)
             for tid in key:
                 dp = stone_by_id[tid]
                 if dp.deletes_nothing_on(schema.struct.fieldNames()):
                     continue  # unknown-column predicate matches no row
-                clean = clean.filter(dp.keep_column(schema.time_column))
-            parts.insert(0, clean)
-        if not parts:  # every chunk field-pruned
-            return spark.createDataFrame([], schema.struct)
-
-        out = merge_chunk_frames(parts)
-        if predicate is not None:
-            out = predicate.apply(out, schema.time_column)
-        cols = [f.name for f in schema.struct.fields if f.name in out.columns]
-        return out.select(*cols)
+                relation = relation.filter(dp.keep_column(schema.time_column))
+            parts.insert(0, relation)
+        return merge_chunk_frames(parts)
 
     def drop_chunks(
         self,

@@ -62,6 +62,27 @@ def test_exact_index_accept_reject(spark, tmp_path, corpus):
     assert got == {(10, 1), (11, 2)}
 
 
+def test_batch_hashed_once(spark, tmp_path, corpus):
+    """The hashed batch feeds the keep-aggregate and the final semi join;
+    it is checkpointed, so the upstream (here a Python UDF counting its
+    calls) runs once per batch document."""
+    path = str(tmp_path / "exact")
+    build_exact_index(corpus, path, n_buckets=8)
+    acc = spark.sparkContext.accumulator(0)
+
+    def bump(text):
+        acc.add(1)
+        return text
+
+    rows = [(10 + i, t) for i, t in enumerate([BASE, OTHER, THIRD, THIRD, NEAR] * 8)]
+    batch = spark.createDataFrame(rows, "doc_id long, text string").select(
+        "doc_id", F.udf(bump, "string")("text").alias("text")
+    )
+    fresh = dedup_against_index(spark, path, batch)
+    assert sorted(r.doc_id for r in fresh.collect()) == [12, 14]
+    assert acc.value == len(rows), f"batch hashed {acc.value} times for {len(rows)} rows"
+
+
 def test_ingest_batch_appends(spark, tmp_path, corpus):
     path = str(tmp_path / "grow")
     build_exact_index(corpus, path, n_buckets=8)

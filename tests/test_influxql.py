@@ -1295,6 +1295,9 @@ def test_explain_statement(catalog):
         v[0] for v in env2["results"][0]["series"][0]["values"]
     )
     assert "HashAggregate" in text2
+    # the printed plan is the one that ran: final, with its metrics
+    assert "isFinalPlan=true" in text2
+    assert "number of output rows: " in text2
 
 
 def test_parse_explain():
