@@ -632,10 +632,10 @@ def run_statements(
     ``database``: the engine Database, required only for SELECT ... INTO
     writebacks (the stock continuous-query form).  ``read_only``: reject
     INTO with the stock POST-required message (set on the GET route).
-    ``resolve_database``: name -> engine Database (or None) for servers
-    hosting several; DDL targets are resolved by STATEMENT name through
-    it, never by the connection's ``db=`` param — ``DROP DATABASE b``
-    sent with ``db=a`` must drop b, not a.
+    ``resolve_database``: name -> engine Database (or None); DDL targets
+    are resolved by STATEMENT name through it, never by the connection's
+    ``db=`` param — ``DROP DATABASE b`` sent with ``db=a`` must drop b,
+    not a.  Without it ``DROP DATABASE`` is refused.
 
     ``registry``/``identity``/``selected_db``: the auth.UserRegistry,
     the authenticated username, and the request's db= name.  A NON-EMPTY
@@ -789,12 +789,11 @@ def run_statements(
                     # the connection's database (db= param) may be a
                     # different hosted db, and dropping it instead would
                     # be wrong-target data loss.
-                    if resolve_database is not None:
-                        victim = resolve_database(stmt.name)
-                    elif databases == [stmt.name]:
-                        victim = database  # single-db server: names agree
-                    else:
-                        victim = None
+                    victim = (
+                        resolve_database(stmt.name)
+                        if resolve_database is not None
+                        else None
+                    )
                     if victim is None:
                         raise InfluxQLPlanError(
                             "DROP DATABASE is not available on this endpoint"

@@ -3,8 +3,7 @@
 These are first-class engine components designed for 100 TB corpora:
 - dedup: exact (hash groupBy), MinHash+LSH, SimHash — shuffle-light banding;
   connected-components clustering of near-dup pairs
-- similarity: brute-force cosine top-k baseline + LSH/IVF scale paths, with
-  persisted bucket-partitioned indexes (ann_index)
+- similarity: brute-force cosine top-k baseline + LSH/IVF scale paths
 - text: language-ID heuristic, quality scoring, token counting, fingerprints
 - multimodal: binary columns with typed metadata; decode/extract plumbing as
   Arrow-batched mapInPandas (decoders stubbed — image/audio libs not present)

@@ -23,7 +23,7 @@ index in this package (``pipeline/index_txn``).  Folding the SAME batch
 twice DOES NOT over-count **distincts already present in the cell**
 (set semantics absorb re-inserted values), but a replayed batch is
 indistinguishable from new data only because HLL is insert-only; unlike
-the BM25/ANN maintainers there is no replacement-by-id, so exact
+the BM25 maintainers there is no replacement-by-id, so exact
 replay-idempotence holds for the VALUES (the sketch state converges to
 the same estimate) — the property tests pin rebuild-equality.
 

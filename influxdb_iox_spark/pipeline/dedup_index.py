@@ -4,8 +4,8 @@ A 100 TB training-data pipeline does not dedup a static corpus once — it
 continuously ingests new shards and must answer "which of these N new
 documents already exist among the T documents accepted so far?" without
 re-reading the corpus.  Both indexes here are plain bucket-partitioned
-parquet (the ann_index.py recipe), so they inherit object-store
-placement, schema evolution, and per-bucket incremental append:
+parquet, so they inherit object-store placement, schema evolution, and
+per-bucket incremental append:
 
 - **Exact index**: one row per accepted document's content digest
   (md5 of normalized text, 16 bytes + canonical id — a ~10⁻⁴ fraction
@@ -154,24 +154,6 @@ def duplicate_matches(
         F.col(id_col).alias("new_id"),
     )
     return batch.join(index.select("content_hash", "canonical_id"), on="content_hash")
-
-
-def append_to_index(
-    spark: SparkSession,
-    path: str,
-    accepted_docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    guard=None,
-    force: bool = False,
-    writer: str | None = None,
-) -> None:
-    """Append the accepted batch's fingerprints (caller guarantees the
-    batch was dedup'd against the index first; intra-batch duplicates
-    collapse to their min id here).  One new file per touched bucket.
-    Serialized through the index's writer claim (``pipeline.index_txn``).  ``writer=`` names a SINGLE logical owner — two live processes must never share a name (a quiet dead incarnation is self-succeeded after the liveness grace)."""
-    with maintenance_txn(path, guard=guard, force=force, writer=writer) as txn:
-        _append_fp_locked(spark, path, accepted_docs, text_col, id_col, txn)
 
 
 def _append_fp_locked(spark, path, accepted_docs, text_col, id_col, txn) -> None:

@@ -1,11 +1,11 @@
 """Optimistic-concurrency guard for persisted index maintenance.
 
 Every index maintainer in this package (BM25 ``update_bm25`` /
-``delete_from_bm25``, ANN ``append/upsert/delete``, the exact- and
-segment-dedup maintainers) is a read-merge-write cycle over a persisted
-layout.  Unguarded, two concurrent maintenance runs silently lose one
-side's batch: both read version V of the index, both write, the second
-overwrite clobbers the first (the classic lost update — the round-12
+``delete_from_bm25``, the exact- and segment-dedup maintainers) is a
+read-merge-write cycle over a persisted layout.  Unguarded, two
+concurrent maintenance runs silently lose one side's batch: both read
+version V of the index, both write, the second overwrite clobbers the
+first (the classic lost update — the round-12
 verdict's Missing #1).  The reference's manifest protocol is
 CAS-everywhere (``/root/reference/object_store/src/aws.rs`` conditional
 puts, mirrored in ``sources/objstore.py``); this module gives the index

@@ -48,20 +48,29 @@ if _FLIGHT_AVAILABLE:
             )
 
 
+def decode_read_info(ticket: bytes) -> tuple[str, str]:
+    """``(database_name, sql)`` of a JSON ReadInfo ticket body; a ticket
+    that is not such a body raises ``ValueError``."""
+    try:
+        info = json.loads(ticket.decode("utf-8"))
+    except (UnicodeDecodeError, json.JSONDecodeError) as e:
+        raise ValueError(f"invalid ticket: {e}") from e
+    name = sql = None
+    if isinstance(info, dict):
+        name, sql = info.get("database_name"), info.get("sql_query")
+    if not name or sql is None:
+        raise ValueError("ticket must carry database_name and sql_query")
+    return name, sql
+
+
 def serve_sql_ticket(ticket, lookup):
     """Flight ``do_get`` body: decode the JSON ReadInfo ticket, resolve
     its database through ``lookup`` (name → Database or None), run the
     SQL and stream the result."""
     try:
-        info = json.loads(ticket.ticket.decode("utf-8"))
-    except (UnicodeDecodeError, json.JSONDecodeError) as e:
-        raise _flight.FlightServerError(f"invalid ticket: {e}") from e
-    name = info.get("database_name")
-    sql = info.get("sql_query")
-    if not name or sql is None:
-        raise _flight.FlightServerError(
-            "ticket must carry database_name and sql_query"
-        )
+        name, sql = decode_read_info(ticket.ticket)
+    except ValueError as e:
+        raise _flight.FlightServerError(str(e)) from e
     database = lookup(name)
     if database is None:
         raise _flight.FlightUnavailableError(f"database {name!r} not found")

@@ -291,8 +291,7 @@ class GrpcH2Server:
         the server's LIVE database dict; Handshake echoes (no auth, like
         the reference's default).  The response stream is one FlightData
         per IPC message (schema, then batches)."""
-        import json as _json
-
+        from influxdb_iox_spark.rpc_flight import decode_read_info
         from influxdb_iox_spark.rpc_management import GrpcStatusError
 
         if method == "Handshake":
@@ -315,15 +314,9 @@ class GrpcH2Server:
             raise GrpcStatusError("Unavailable", "server is not serving data plane")
         ticket = bytes(decode_message(request, FLIGHT_TICKET).get("ticket") or b"")
         try:
-            info = _json.loads(ticket.decode("utf-8"))
-        except (UnicodeDecodeError, _json.JSONDecodeError) as e:
-            raise GrpcStatusError("InvalidArgument", f"invalid ticket: {e}")
-        name = info.get("database_name")
-        sql = info.get("sql_query")
-        if not name or sql is None:
-            raise GrpcStatusError(
-                "InvalidArgument", "ticket must carry database_name and sql_query"
-            )
+            name, sql = decode_read_info(ticket)
+        except ValueError as e:
+            raise GrpcStatusError("InvalidArgument", str(e)) from e
         md = self.iox.databases.get(name)
         if md is None:
             raise GrpcStatusError("NotFound", f"database {name!r} not found")

@@ -588,50 +588,6 @@ def _dir_sig(d):
     )
 
 
-def test_upsert_holds_one_claim(spark, tmp_path):
-    """upsert_into_ann_index's delete+append run under a single claim —
-    exactly one version is minted per upsert, so no other maintainer can
-    slot between the two halves."""
-    import numpy as np
-
-    from influxdb_iox_spark.pipeline.ann_index import (
-        build_ivf_index,
-        upsert_into_ann_index,
-    )
-
-    rng = np.random.default_rng(7)
-    rows = [(i, [float(x) for x in rng.normal(size=4)]) for i in range(40)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    path = str(tmp_path / "ivf")
-    build_ivf_index(df, path, n_centroids=4, seed=1)
-
-    newrows = [(100 + i, [float(x) for x in rng.normal(size=4)]) for i in range(3)]
-    upsert_into_ann_index(
-        spark,
-        path,
-        spark.createDataFrame(newrows, "vec_id long, embedding array<double>"),
-    )
-    g = guard_for_path(path)
-    assert g.current_version() == 1  # one claim, one commit for the pair
-    # replay converges (delete-then-append) and mints exactly one more
-    upsert_into_ann_index(
-        spark,
-        path,
-        spark.createDataFrame(newrows, "vec_id long, embedding array<double>"),
-    )
-    assert g.current_version() == 2
-    got = (
-        spark.read.parquet(path)
-        .filter("vec_id >= 100")
-        .groupBy("vec_id")
-        .count()
-        .collect()
-    )
-    assert sorted((r["vec_id"], r["count"]) for r in got) == [
-        (100, 1), (101, 1), (102, 1)
-    ]
-
-
 def test_randomized_writer_interleavings_hold_invariants(tmp_path):
     """Seeded random stress: N threads each run a random mix of
     claim→[mutate?]→commit/abort cycles with tiny waits against one

@@ -1249,6 +1249,7 @@ def test_v1_database_ddl_onboarding(spark, tmp_path):
         catalog_from_database(db),
         databases=["mydb"],
         database=db,
+        resolve_database={"mydb": db}.get,
     )
     assert env2["results"][0] == {"statement_id": 0}
     assert db.table_names() == []

@@ -1,15 +1,12 @@
-"""Lifecycle policy + tag catalog + RPC facade + streaming windows."""
+"""Lifecycle policy + tag catalog + RPC facade."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 from influxdb_iox_spark.database import Database
 from influxdb_iox_spark.rpc import InfluxRpc
 from influxdb_iox_spark.schema import InfluxColumnType, IoxSchema
 from influxdb_iox_spark.sources.store import TableStore
 from influxdb_iox_spark.streaming.lifecycle import LifecyclePolicy, LifecycleRules
-from influxdb_iox_spark.streaming.windows import windowed_aggregate
 
 CPU = IoxSchema.build(["region"], {"user": InfluxColumnType.FIELD_FLOAT})
 S = 1_000_000_000
@@ -72,48 +69,6 @@ def test_rpc_facade_data_ops(spark, tmp_path):
     assert out == {"east": 2.0, "west": 7.0}
     frames = list(rpc.read_filter_frames("cpu"))
     assert [f.tags["region"] for f in frames] == ["east", "west"]
-
-
-def test_windowed_aggregate_batch(spark):
-    df = spark.createDataFrame(
-        [("a", 1.0, 10 * S), ("a", 3.0, 50 * S), ("a", 5.0, 70 * S)],
-        "k string, v double, time long",
-    )
-    out = windowed_aggregate(
-        df, ["k"], [F.sum("v").alias("sum_v")], every_seconds=60
-    ).orderBy("time")
-    rows = [(r.k, r.sum_v, r.time) for r in out.collect()]
-    assert rows == [("a", 4.0, 60 * 1_000_000), ("a", 5.0, 120 * 1_000_000)]
-
-
-def test_windowed_aggregate_streaming(spark, tmp_path):
-    """Drive the same op as a real stream (file source, availableNow)."""
-    src = tmp_path / "stream_src"
-    src.mkdir()
-    df = spark.createDataFrame(
-        [("a", 1.0, 10 * S), ("a", 3.0, 50 * S), ("b", 5.0, 70 * S)],
-        "k string, v double, time long",
-    )
-    df.write.parquet(str(src / "batch0"))
-    stream = spark.readStream.schema("k string, v double, time long").parquet(
-        str(src / "*")
-    )
-    agg = windowed_aggregate(
-        stream, ["k"], [F.sum("v").alias("sum_v")], every_seconds=60,
-        late_arrive_window_seconds=60,
-    )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("win_out")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = {
-        (r.k, r.time): r.sum_v for r in spark.sql("SELECT * FROM win_out").collect()
-    }
-    assert rows == {("a", 60 * 1_000_000): 4.0, ("b", 120 * 1_000_000): 5.0}
 
 
 def test_policy_never_mints_empty_partition_keys(spark, tmp_path):

@@ -243,64 +243,3 @@ def test_crashed_fold_redrives_convergently(spark, tmp_path):
         )
     )
     assert got == want
-
-
-def test_streaming_moments_ingest_exactly_once(spark, tmp_path):
-    """MomentsIngest through a real Structured Streaming source: folds
-    match a from-scratch build EXACTLY (not within-error — moments are
-    exact), a checkpoint restart re-folds nothing, and a replayed batch
-    id is skipped by the applied ledger."""
-    import os
-
-    from influxdb_iox_spark.pipeline.moments import (
-        build_moment_cells,
-        moment_stats,
-        read_moment_cells,
-        save_moment_cells,
-    )
-    from influxdb_iox_spark.streaming.moments_ingest import MomentsIngest
-
-    path = str(tmp_path / "mo")
-    seed = _raw(spark, 1_000)
-    save_moment_cells(spark, path, seed, ["k"], "t", "v", DAY)
-
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    b1 = _raw(spark, 600, offset=1_000)
-    b2 = _raw(spark, 600, offset=1_600)
-    b1.coalesce(1).write.mode("append").json(src)
-    b2.coalesce(1).write.mode("append").json(src)
-
-    def stream():
-        return (
-            spark.readStream.schema("k string, t long, v double")
-            .option("maxFilesPerTrigger", 1)
-            .json(src)
-        )
-
-    ing = MomentsIngest(spark, path)
-    ing.start(stream(), str(tmp_path / "ckpt")).awaitTermination(120)
-    assert ing.rows_total == 1_200
-
-    everything = seed.unionByName(b1).unionByName(b2)
-    want = sorted(
-        map(
-            tuple,
-            moment_stats(
-                build_moment_cells(everything, ["k"], "t", "v", DAY), ["k"]
-            ).collect(),
-        )
-    )
-    got = sorted(
-        map(tuple, moment_stats(read_moment_cells(spark, path)[0], ["k"]).collect())
-    )
-    assert got == want
-
-    # restart on the same checkpoint: nothing re-folds
-    ing2 = MomentsIngest(spark, path)
-    ing2.start(stream(), str(tmp_path / "ckpt")).awaitTermination(120)
-    assert ing2.rows_total == 0
-    got2 = sorted(
-        map(tuple, moment_stats(read_moment_cells(spark, path)[0], ["k"]).collect())
-    )
-    assert got2 == want

@@ -264,95 +264,6 @@ def test_pack_sequences_matches_naive_cumsum(spark):
     assert got[7][1] == got[7][2]  # empty doc lands in one sequence
 
 
-def test_corpus_prep_chain(spark):
-    """The one-call prep chain: quality gate, blocklist, exact dedup,
-    near-dup drop, deterministic sample — with a per-stage ledger, and
-    re-runs produce the identical survivor set."""
-    from influxdb_iox_spark.pipeline.prep import corpus_prep
-
-    base = (
-        "spark is a unified analytics engine for large scale data processing "
-        "with high level apis in java scala python and r plus an optimized engine"
-    )
-    rows = [
-        (1, base),
-        (2, base),                                     # exact dup
-        (3, base.replace("optimized engine", "optimized runtime engine")),  # near dup
-        (4, "tiny"),                                   # fails quality (length)
-        (5, "the bad word appears in this otherwise long and reasonable "
-            "document about cooking pasta with plenty of the usual stopwords "
-            "in it for the quality gate to accept happily"),  # blocklisted
-        (6, "a completely different long document describing mountain hiking "
-            "trails with alpine lakes and the scenic ridgelines that a summer "
-            "visitor would enjoy walking across for hours at a time"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out, report = corpus_prep(
-        df,
-        quality_rules=[("q_n_tokens", 10, None)],
-        blocklist=["bad"],
-        exact_dedup=True,
-        near_dup_threshold=0.5,
-    )
-    ledger = report.as_dict()
-    assert ledger["input"] == 6
-    assert ledger["quality"] == 5       # drops 4
-    assert ledger["blocklist"] == 4     # drops 5
-    assert ledger["exact_dedup"] == 3   # drops 2
-    assert ledger["near_dup"] == 2      # drops 3
-    assert sorted(r.doc_id for r in out.collect()) == [1, 6]
-
-    # deterministic: the same call yields the same survivors
-    out2, _ = corpus_prep(
-        df,
-        quality_rules=[("q_n_tokens", 10, None)],
-        blocklist=["bad"],
-        exact_dedup=True,
-        near_dup_threshold=0.5,
-        count_stages=False,
-    )
-    assert sorted(r.doc_id for r in out2.collect()) == [1, 6]
-
-    # sampling stage is a stable hash gate
-    out3, rep3 = corpus_prep(
-        df, quality_rules=None, blocklist=None, exact_dedup=False,
-        sample_rate=0.5,
-    )
-    ids3 = sorted(r.doc_id for r in out3.collect())
-    out4, _ = corpus_prep(
-        df, quality_rules=None, blocklist=None, exact_dedup=False,
-        sample_rate=0.5,
-    )
-    assert ids3 == sorted(r.doc_id for r in out4.collect())
-
-
-def test_corpus_prep_segment_stage(spark):
-    """The optional repeated-span stage rewrites docs between exact and
-    near-dup: boilerplate spans vanish from later docs, fully-boilerplate
-    docs vanish entirely, and non-text columns survive the rewrite."""
-    from influxdb_iox_spark.pipeline.prep import corpus_prep
-
-    rows = [
-        (1, "one two three four\n\nreal content here", "s1"),
-        (2, "one two three four\n\nother real words", "s2"),
-        (3, "one two three four", "s3"),  # all boilerplate
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string, src string")
-    out, report = corpus_prep(
-        df,
-        quality_rules=None,
-        blocklist=None,
-        exact_dedup=False,
-        segment_delimiter="\n\n",
-    )
-    got = {r.doc_id: r for r in out.collect()}
-    assert report.as_dict()["segment_dedup"] == 2
-    assert got[1].text == "one two three four\n\nreal content here"
-    assert got[2].text == "other real words"
-    assert got[2].src == "s2"  # non-text columns preserved
-    assert 3 not in got
-
-
 def test_shuffle_into_shards_is_deterministic_permutation(spark):
     from influxdb_iox_spark.pipeline.corpus import shuffle_into_shards
 

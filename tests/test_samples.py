@@ -161,67 +161,6 @@ def test_persisted_sample_fold_matches_from_scratch_and_skips_replay(
     assert got2 == want
 
 
-def test_streaming_samples_ingest_exactly_once(spark, tmp_path):
-    import os
-
-    from influxdb_iox_spark.pipeline.samples import (
-        read_sample_cells,
-        save_sample_cells,
-    )
-    from influxdb_iox_spark.streaming.samples_ingest import SamplesIngest
-
-    path = str(tmp_path / "sm")
-    seed = _raw_ids(spark, 800)
-    save_sample_cells(spark, path, seed, ["k"], "t", "rid", "v", DAY, k=64)
-
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    b1 = _raw_ids(spark, 400, offset=800)
-    b2 = _raw_ids(spark, 400, offset=1_200)
-    b1.coalesce(1).write.mode("append").json(src)
-    b2.coalesce(1).write.mode("append").json(src)
-
-    def stream():
-        return (
-            spark.readStream.schema("k string, t long, rid long, v double")
-            .option("maxFilesPerTrigger", 1)
-            .json(src)
-        )
-
-    ing = SamplesIngest(spark, path)
-    ing.start(stream(), str(tmp_path / "ckpt")).awaitTermination(120)
-    assert ing.rows_total == 800
-
-    everything = seed.unionByName(b1).unionByName(b2)
-    want = sorted(
-        map(
-            tuple,
-            sample_quantiles(
-                build_sample_cells(
-                    everything, ["k"], "t", "rid", "v", DAY, k=64
-                ),
-                [0.25, 0.5],
-                ["k"],
-                k=64,
-            ).collect(),
-        )
-    )
-    got = sorted(
-        map(
-            tuple,
-            sample_quantiles(
-                read_sample_cells(spark, path)[0], [0.25, 0.5], ["k"], k=64
-            ).collect(),
-        )
-    )
-    assert got == want
-
-    # checkpoint restart: nothing re-folds
-    ing2 = SamplesIngest(spark, path)
-    ing2.start(stream(), str(tmp_path / "ckpt")).awaitTermination(120)
-    assert ing2.rows_total == 0
-
-
 def test_null_id_raises_in_plan(spark):
     """Round-16 review: a NULL row id would collide every NULL row into
     one NULL-hash slot AND desync Spark's NULLS FIRST rank from the

@@ -5,8 +5,8 @@ server pair.
     create database (gRPC) → write LP (gRPC + HTTP) → query (SQL over
     HTTP, Arrow Flight, storage RPC) → introspect (chunks, partitions,
     tag values, metrics) → lifecycle sweep (compaction) → replicate to a
-    second server through the write buffer → import legacy TSM data →
-    dedup the replicated corpus against a fingerprint index.
+    second server through the write buffer → dedup the replicated
+    corpus against a fingerprint index.
 
 Each piece has its own focused battery elsewhere; this test pins that
 they COMPOSE — same stores, same session, no seams.
@@ -134,20 +134,7 @@ def test_full_user_journey(spark, tmp_path):
             ("west", 25.0, 300),
         ]
 
-        # 7. legacy migration: TSM files import into the SAME database
-        from influxdb_iox_spark.sources.tsm import export_tsm, import_tsm
-
-        tsm_dir = str(tmp_path / "tsm")
-        md = primary.databases[db]
-        export_tsm(
-            md.database.table("cpu"), "cpu", md.database.table_schema("cpu"), tsm_dir
-        )
-        import glob
-
-        import_tsm(spark, md.database.store, sorted(glob.glob(tsm_dir + "/*.tsm")))
-        assert md.database.store.manifest("cpu")  # imported points registered
-
-        # 8. pipeline over served data: fingerprint-index dedup of the
+        # 7. pipeline over served data: fingerprint-index dedup of the
         # replicated "corpus" (region strings as toy documents)
         from influxdb_iox_spark.pipeline.dedup_index import (
             build_exact_index,
@@ -173,7 +160,7 @@ def test_full_user_journey(spark, tmp_path):
         )
         assert [r.doc_id for r in fresh.collect()] == [901]
 
-        # 9. the third write path: PB column batches over the h2c gRPC
+        # 8. the third write path: PB column batches over the h2c gRPC
         # endpoint (true tonic method path), then the series-transform
         # library over the served table
         from influxdb_iox_spark import management_proto as mp
